@@ -1,23 +1,18 @@
-"""Pure-stdlib WAV (RIFF PCM) codec for the multimodal decode path.
+"""Pure-stdlib WAV (RIFF PCM) codec.
 
 Same recipe as `extraction/imagecodec.py`: the container has no audio
 libraries, but canonical WAV is plain RIFF chunk parsing + 16-bit
 little-endian PCM — implemented from the public RIFF/WAVE layout
 (`fmt ` chunk: audio format / channels / sample rate / block align;
 `data` chunk: interleaved frames).  The reference pipeline has no audio
-stage; this codec exists for the training-data brief's multimodal
-columns (decode / feature-extract over opaque ``binary`` payloads).
+stage and no package code calls this module; media ingest is out of
+scope and the codec is slated for removal.
 
 Scope (honest boundary): 16-bit integer PCM decodes REALLY, and so do
 the classic COMPRESSED telephony formats — G.711 mu-law / A-law
 (format tags 7/6, pure-formula expansions) and mono IMA ADPCM (tag
 0x11, block-based adaptive prediction).  Perceptual codecs
-(MP3/AAC/Vorbis) and float/24-bit PCM raise ``UnsupportedAudioError``;
-callers fall back to the byte-stat stub exactly like undecodable
-images.
-
-All stats are integer arithmetic so the DuckDB oracle can recompute
-them bit-exactly (no float RMS in the gated surface).
+(MP3/AAC/Vorbis) and float/24-bit PCM raise ``UnsupportedAudioError``.
 """
 
 from __future__ import annotations
@@ -138,8 +133,7 @@ def encode_wav(
 # --- G.711 companding (format tags 7 = mu-law, 6 = A-law) -----------------
 #
 # Pure formula expansions from the public G.711 spec — integer-exact,
-# so a SQL oracle reproduces every decoded sample from the encoded
-# byte alone (`plans/extra_queries.py::g711_decode_stats`).
+# so every decoded sample follows from the encoded byte alone.
 
 
 def mulaw_expand(b: int) -> int:

@@ -1,4 +1,4 @@
-"""Pure-stdlib GIF codec (87a/89a) for the multimodal decode path.
+"""Pure-stdlib GIF codec (87a/89a).
 
 Same recipe as `imagecodec.py` / `videocodec.py`: the container is
 plain struct parsing (logical screen descriptor, color tables, image
@@ -6,12 +6,11 @@ descriptors, extension blocks) and the pixel data is REAL GIF-variant
 LZW — variable code width starting at min_code_size+1, growing at
 dictionary size 2^width, CLEAR resets, EOI terminates, codes packed
 little-endian across 255-byte sub-blocks.  Implemented from the public
-GIF89a specification; the reference pipeline has no image stage at all
-(multimodal columns are this repo's training-data extension).
+GIF89a specification; the reference pipeline has no image stage at all,
+no package code calls this module, and the codec is slated for removal
+with the rest of the out-of-scope media codecs.
 
-Animated GIFs decode to a frame list, so the video frame-sample stage
-(`multimodal.py::sample_video_frames` analog `sample_gif_frames`)
-treats a GIF like a tiny video.  Frames after the first may be partial
+Animated GIFs decode to a frame list.  Frames after the first may be partial
 (sub-rectangle updates); this codec composites each frame over the
 previous full canvas (disposal method 1 semantics — the fixture's
 encoder only emits full-canvas frames, and the compositing path is

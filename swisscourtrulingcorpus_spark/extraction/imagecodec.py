@@ -1,4 +1,4 @@
-"""Pure-stdlib PNG and BMP codecs for the multimodal decode path.
+"""Pure-stdlib PNG and BMP codecs.
 
 The container has no PIL/OpenCV, but PNG needs only ``zlib`` +
 ``binascii.crc32`` (both stdlib) and uncompressed BMP is plain struct
@@ -12,12 +12,10 @@ padding).
 Scope (honest boundary, documented in `decode_image`): PNG 8-bit
 non-interlaced greyscale/RGB/grey+alpha/RGBA and BMP 24-bit
 uncompressed decode REALLY — pixels come out of the payload bytes.
-Other codecs (JPEG needs a DCT stack) still raise, with the byte-stat
-stub as the pipeline fallback.  Per-pixel work is Python loops over
-small images — correct and fine for fixture-scale verification; a
-production 100 TB decode stage would swap in a vectorized C codec
-behind the same ``mapInPandas`` signature (the Spark-side plumbing is
-what this repo owns).
+GIF dispatches to `gifcodec.py`; other codecs (JPEG needs a DCT stack)
+raise.  Per-pixel work is Python loops over small images.  No package
+code calls this module: SCRC ingests HTML/PDF rulings, media ingest is
+out of scope, and the codec is slated for removal.
 """
 
 from __future__ import annotations
@@ -240,28 +238,19 @@ def encode_bmp24(width: int, height: int, pixels: bytes) -> bytes:
 # ---------------------------------------------------------------------------
 
 def decode_image(payload: bytes) -> tuple[int, int, int, bytearray]:
-    """Sniff + decode.  PNG, 24-bit BMP and baseline JPEG decode for
-    real; anything else (progressive/arithmetic JPEG, video, audio)
-    raises ``UnsupportedImageError`` — callers fall back to the
-    byte-stat stub.
+    """Sniff + decode.  PNG, 24-bit BMP and the first frame of a GIF
+    decode for real; anything else (JPEG, video, audio) raises
+    ``UnsupportedImageError``.
 
     THIS dispatch is the error-contract point: malformed payloads of
     any sniffed format (truncated IDAT -> zlib.error, short headers ->
     struct/IndexError, ...) are translated to ``UnsupportedImageError``
-    here, so a caller's single except clause covers all codecs (r05
-    review — the JPEG path had the translation, PNG/BMP leaked raw
-    errors)."""
+    here, so a caller's single except clause covers all codecs."""
     try:
         if payload[:8] == _PNG_SIG:
             return decode_png(payload)
         if payload[:2] == b"BM":
             return decode_bmp(payload)
-        if payload[:2] == b"\xff\xd8":
-            from swisscourtrulingcorpus_spark.extraction.jpegcodec import (
-                decode_jpeg,
-            )
-
-            return decode_jpeg(payload)
         if payload[:6] in (b"GIF87a", b"GIF89a"):
             from swisscourtrulingcorpus_spark.extraction.gifcodec import (
                 decode_gif,

@@ -12,8 +12,7 @@ encryption and image-only scans are out of scope and yield None
 reference's Tika-failure handling).
 
 Spark surface: an Arrow-batched pandas_udf over the binary payload
-column — the same mapInPandas-adjacent shape as the multimodal decode
-stage, so bytes never leave the executor.
+column, so bytes never leave the executor.
 """
 
 from __future__ import annotations

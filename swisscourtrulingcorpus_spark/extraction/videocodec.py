@@ -1,5 +1,4 @@
-"""Pure-stdlib AVI (RIFF) video codec for the multimodal frame-sample
-path.
+"""Pure-stdlib AVI (RIFF) video codec.
 
 Same recipe as `extraction/imagecodec.py` / `audiocodec.py`: AVI is a
 RIFF container — LIST `hdrl` (`avih` main header + `strl` stream
@@ -7,18 +6,13 @@ headers) followed by LIST `movi` holding per-frame chunks — and an
 uncompressed `DIB ` video stream stores each frame as a BMP-style
 bottom-up BGR plane with 4-byte row padding.  All of that is plain
 struct parsing, implemented from the public RIFF/AVI layout.  The
-reference pipeline has no video stage; this codec exists for the
-training-data brief's multimodal columns (frame-sample / decode over
-opaque ``binary`` payloads).
+reference pipeline has no video stage and no package code calls this
+module; media ingest is out of scope and the codec is slated for
+removal.
 
 Scope (honest boundary): uncompressed 24-bit DIB frames (`00db`
-chunks) decode REALLY, and so do Motion-JPEG streams (`00dc` chunks
-under the `MJPG` handler) — each MJPG frame is a standalone baseline
-JPEG, fed through the existing pure-stdlib decoder
-(`extraction/jpegcodec.py::decode_jpeg`; grayscale frames replicate to
-RGB).  Remaining compressed handlers (H.264 etc., which need real
-native codecs) raise ``UnsupportedVideoError``; callers fall back to
-the byte-stat stub exactly like undecodable images.
+chunks) decode REALLY.  Compressed handlers (MJPG, H.264 etc.) raise
+``UnsupportedVideoError``.
 """
 
 from __future__ import annotations
@@ -60,54 +54,33 @@ def decode_avi(data: bytes) -> tuple[int, int, int, list[bytearray]]:
             raise UnsupportedVideoError("not a RIFF/AVI payload")
         width = height = us_per_frame = None
         cur_stream = None  # fccType of the strl being walked
-        mjpg = False
         raw_frames: list[bytes] = []
-        jpeg_frames: list[bytes] = []
         for cid, body in _walk_chunks(data, 12, len(data)):
             if cid == b"avih":
                 (us_per_frame,) = struct.unpack("<I", body[0:4])
                 width, height = struct.unpack("<II", body[32:40])
             elif cid == b"strh":
                 cur_stream, handler = body[0:4], body[4:8]
-                if cur_stream == b"vids":
-                    if handler == b"MJPG":
-                        mjpg = True
-                    elif handler not in (b"DIB ", b"\x00" * 4):
-                        raise UnsupportedVideoError(
-                            f"compressed video handler {handler!r} unsupported"
-                        )
+                if cur_stream == b"vids" and handler not in (b"DIB ", b"\x00" * 4):
+                    raise UnsupportedVideoError(
+                        f"compressed video handler {handler!r} unsupported"
+                    )
             elif cid == b"strf" and cur_stream == b"vids":
                 # only the VIDEO stream's format chunk is a
                 # BITMAPINFOHEADER — an accompanying 'auds' strf is a
                 # WAVEFORMATEX and must not be misparsed (r05 review)
                 (bpp,) = struct.unpack("<H", body[14:16])
                 (compression,) = struct.unpack("<I", body[16:20])
-                if mjpg:
-                    if compression != 0x47504A4D:  # 'MJPG'
-                        raise UnsupportedVideoError(
-                            f"MJPG stream with strf compression {compression:#x}"
-                        )
-                elif bpp != 24 or compression != 0:
+                if bpp != 24 or compression != 0:
                     raise UnsupportedVideoError(
                         f"strf bpp={bpp} compression={compression} unsupported"
                     )
             elif cid[2:4] == b"dc":
-                if not mjpg:
-                    raise UnsupportedVideoError(
-                        "compressed frame chunks unsupported"
-                    )
-                jpeg_frames.append(body)
+                raise UnsupportedVideoError("compressed frame chunks unsupported")
             elif cid[2:4] == b"db":
                 raw_frames.append(body)
         if width is None or us_per_frame is None:
             raise UnsupportedVideoError("missing avih header")
-        if mjpg:
-            return (
-                width,
-                height,
-                us_per_frame,
-                _decode_mjpg_frames(width, height, jpeg_frames),
-            )
         row_bytes = width * 3
         padded = (row_bytes + 3) & ~3
         frames: list[bytearray] = []
@@ -132,41 +105,6 @@ def decode_avi(data: bytes) -> tuple[int, int, int, list[bytearray]]:
         raise UnsupportedVideoError(
             f"malformed AVI payload ({type(e).__name__}: {e})"
         ) from e
-
-
-def _decode_mjpg_frames(
-    width: int, height: int, jpeg_frames: list[bytes]
-) -> list[bytearray]:
-    """Decode each `00dc` Motion-JPEG chunk as a standalone baseline
-    JPEG via the shared pure-stdlib decoder; grayscale frames replicate
-    to RGB so every decode_avi frame is a uniform 3-channel plane.
-    Frame dims must match the container header — a mismatch is a
-    malformed payload, not a silent rescale."""
-    from swisscourtrulingcorpus_spark.extraction.jpegcodec import decode_jpeg
-
-    frames: list[bytearray] = []
-    for raw in jpeg_frames:
-        try:
-            fw, fh, nch, px = decode_jpeg(bytes(raw))
-        except Exception as e:  # codec errors become the video contract
-            raise UnsupportedVideoError(
-                f"undecodable MJPG frame ({type(e).__name__}: {e})"
-            ) from e
-        if (fw, fh) != (width, height):
-            raise UnsupportedVideoError(
-                f"MJPG frame dims {fw}x{fh} != container {width}x{height}"
-            )
-        if nch == 3:
-            frames.append(bytearray(px))
-        else:
-            # slice-assignment replication (C-level), not a per-pixel
-            # Python loop — this is the executor hot path (r06 review)
-            out = bytearray(width * height * 3)
-            out[0::3] = px
-            out[1::3] = px
-            out[2::3] = px
-            frames.append(out)
-    return frames
 
 
 def _chunk(cid: bytes, body: bytes) -> bytes:
@@ -210,45 +148,6 @@ def encode_avi(
                 plane[dst + x * 3 + 1] = px[(y * width + x) * 3 + 1]
                 plane[dst + x * 3 + 2] = px[(y * width + x) * 3 + 0]
         movi_body += _chunk(b"00db", bytes(plane))
-    hdrl = _list(
-        b"hdrl",
-        _chunk(b"avih", avih)
-        + _list(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)),
-    )
-    movi = _list(b"movi", movi_body)
-    return (
-        b"RIFF" + struct.pack("<I", 4 + len(hdrl) + len(movi)) + b"AVI " + hdrl + movi
-    )
-
-
-def encode_avi_mjpg(
-    width: int,
-    height: int,
-    jpeg_frames: list[bytes],
-    us_per_frame: int = 40000,
-) -> bytes:
-    """Encode already-compressed baseline-JPEG frames as a Motion-JPEG
-    AVI: `strh` handler MJPG, `strf` biCompression 'MJPG', one `00dc`
-    chunk per frame holding the raw JPEG bytes."""
-    max_size = max((len(j) for j in jpeg_frames), default=0)
-    avih = struct.pack(
-        "<IIIIIIIIII4I",
-        us_per_frame, max_size * 25, 0, 0x10, len(jpeg_frames), 0, 1,
-        max_size, width, height, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MJPG" + struct.pack(
-            "<IHHIIIIIIiI", 0, 0, 0, 0, us_per_frame, 1000000, 0,
-            len(jpeg_frames), max_size, -1, 0,
-        ) + struct.pack("<4h", 0, 0, width, height)
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40, width, height, 1, 24, 0x47504A4D, max_size, 0, 0, 0, 0,
-    )
-    movi_body = b""
-    for j in jpeg_frames:
-        movi_body += _chunk(b"00dc", j)
     hdrl = _list(
         b"hdrl",
         _chunk(b"avih", avih)

@@ -619,15 +619,10 @@ def banded_hamming_pairs(
     band_bits: int = 14,
     out_a: str = "doc_a",
     out_b: str = "doc_b",
-    group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Generic banded-hamming near-dup pairing over a slim
-    (id, <hash bigint>) table — ONE implementation behind
-    `simhash_hamming_pairs` (text), the image dHash gate, and the
-    audio energy-hash gate.  ``group_cols`` adds partition keys to the
-    band equi-join (e.g. modality over a heterogeneous media corpus):
-    pairs only form within a group, and because the columns ride the
-    SAME single join no second pass or post-filter is needed.
+    (id, <hash bigint>) table — the implementation behind
+    `simhash_hamming_pairs`.
     Candidates come from an EQUI-join on
     ``n_bands`` x ``band_bits`` bit-bands; by pigeonhole, hamming <=
     ``threshold`` differing bits touch at most ``threshold`` bands, so
@@ -645,9 +640,7 @@ def banded_hamming_pairs(
     """
     assert threshold <= n_bands - 1, "pigeonhole recall needs threshold <= n_bands - 1"
     mask = (1 << band_bits) - 1
-    grp = [F.col(c) for c in group_cols]
     bands = fp.select(
-        *grp,
         F.col(id_col).alias("__id"),
         F.col(hash_col).alias("__h"),
         F.posexplode(
@@ -660,14 +653,12 @@ def banded_hamming_pairs(
         ).alias("band", "band_key"),
     )
     left = bands.select(
-        *group_cols,
         F.col("__id").alias(out_a),
         F.col("__h").alias("__ha"),
         "band",
         "band_key",
     )
     right = bands.select(
-        *group_cols,
         F.col("__id").alias(out_b),
         F.col("__h").alias("__hb"),
         "band",
@@ -679,75 +670,12 @@ def banded_hamming_pairs(
         for j in range(n_bands)
     ) + " END"
     return (
-        left.join(right, on=["band", "band_key", *group_cols])
+        left.join(right, on=["band", "band_key"])
         .where(F.col(out_a) < F.col(out_b))
         .where(F.col("band") == F.expr(first_band))
         .withColumn("hamming", F.expr("bit_count(__ha ^ __hb)"))
         .where(F.col("hamming") <= threshold)
-        .select(*group_cols, out_a, out_b, "hamming")
-    )
-
-
-def banded_hamming_probe(
-    probe: DataFrame,
-    registry: DataFrame,
-    hash_col: str,
-    id_col: str = "doc_id",
-    threshold: int = 3,
-    n_bands: int = 4,
-    band_bits: int = 14,
-    out_a: str = "doc_a",
-    out_b: str = "doc_b",
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """ASYMMETRIC banded-hamming lookup: which probe-side fingerprints
-    near-match a REGISTRY fingerprint?  The incremental twin of
-    `banded_hamming_pairs` — a streaming ingest probes each
-    micro-batch against the accumulated registry instead of
-    re-self-joining history (history is only ever touched through its
-    fingerprint table, the `incremental_minhash_dedup` contract).
-
-    Same banding, same pigeonhole recall bound, same first-matching-
-    band single-emission (a probe/registry candidate sharing several
-    bands still emits once, via a free map-side filter — never a
-    pair-output-sized distinct).  Returns (out_a = probe id, out_b =
-    registry id, hamming) — NOT id-ordered: the sides are
-    semantically different tables.  Probe ids present in the registry
-    never self-match (id equality is excluded), so at-least-once
-    replays that re-probe committed docs don't fabricate pairs.
-    """
-    assert threshold <= n_bands - 1, "pigeonhole recall needs threshold <= n_bands - 1"
-    mask = (1 << band_bits) - 1
-
-    def _bands(df: DataFrame, out_id: str, out_h: str) -> DataFrame:
-        return df.select(
-            *[F.col(c) for c in group_cols],
-            F.col(id_col).alias(out_id),
-            F.col(hash_col).alias(out_h),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.expr(f"shiftright({hash_col}, {band_bits * j}) & {mask}")
-                        for j in range(n_bands)
-                    ]
-                )
-            ).alias("band", "band_key"),
-        )
-
-    left = _bands(probe, out_a, "__ha")
-    right = _bands(registry, out_b, "__hb")
-    first_band = "CASE " + " ".join(
-        f"WHEN (shiftright(__ha, {band_bits * j}) & {mask}) = "
-        f"(shiftright(__hb, {band_bits * j}) & {mask}) THEN {j}"
-        for j in range(n_bands)
-    ) + " END"
-    return (
-        left.join(right, on=["band", "band_key", *group_cols])
-        .where(F.col(out_a) != F.col(out_b))
-        .where(F.col("band") == F.expr(first_band))
-        .withColumn("hamming", F.expr("bit_count(__ha ^ __hb)"))
-        .where(F.col("hamming") <= threshold)
-        .select(*group_cols, out_a, out_b, "hamming")
+        .select(out_a, out_b, "hamming")
     )
 
 

@@ -64,11 +64,14 @@ def _manifest_path(out_dir: str) -> str:
 
 
 def _read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The processed-file manifest, or None when no build has written
+    one yet.  Any other read error propagates: treating an unreadable
+    manifest as absent would switch `build_corpus` to overwrite and
+    replace every domain table with one batch."""
     path = _manifest_path(out_dir)
-    try:
-        return spark.read.parquet(path)
-    except Exception:
+    if not os.path.exists(path):
         return None
+    return spark.read.parquet(path)
 
 
 def build_corpus(

@@ -631,8 +631,7 @@ def ewma_gap_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`operators/relational.py::integer_ewma_by_key`) — the
     traffic-model statistic a rate limiter or anomaly detector keeps
     per entity, and the engine's only sequential per-key recurrence
-    over business data (the codecs' arithmetic class, outside the
-    codec layer).  The oracle replays the same fold with a recursive
+    over business data.  The oracle replays the same fold with a recursive
     CTE over row-numbered gaps — order, tie-breaks, and every floor
     division are all on the hook.  Users with fewer than two events
     have no gap and no row."""

@@ -543,10 +543,10 @@ def cusum_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def incremental_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STREAMING CUSUM twin value-gated (the probe-stage pattern
-    `incremental_media_neardup` established): the events table replays
-    through the genuine `streaming/stateful.py::make_cusum_update`
-    fold — the exact function `cusum_drift_stream` hands to
+    """The STREAMING CUSUM twin value-gated as a probe stage: the
+    events table replays through the genuine
+    `streaming/stateful.py::make_cusum_update` fold — the exact
+    function `cusum_drift_stream` hands to
     applyInPandasWithState — as three day-ordered micro-batch chunks
     per key with cross-batch state carry
     (`cusum_drift_batch_replay`).  References are HISTORY-derived

@@ -164,15 +164,9 @@ def write_rich_fixture_tree(root: str, n_docs: int = 120) -> list[str]:
     citations, outcomes in three languages) written as raw FILES the
     way the reference's scraper lands them: per doc a ``.json``
     metadata file plus an ``.html`` (even ids) or FlateDecode ``.pdf``
-    (odd ids) payload, plus media attachments: a PNG every 5th doc
-    (pixel (x,y,c) = (id + 3x + 7y + 11c) % 256, 6×4 RGB), a WAV every
-    6th (8 kHz mono, id%20+5 frames, sample j = ((17·id + 5j) mod
-    65536) − 32768) and an AVI every 8th (id%3+1 DIB frames of 3×2,
-    pixel (f,x,y,c) = (id + 5f + 7x + 11y + 13c) % 256).  Returns the
-    list of document names written."""
+    (odd ids) payload.  Returns the list of document names written."""
     import html as _html
 
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import encode_png
     from swisscourtrulingcorpus_spark.sources.domain_fixtures import (
         build_raw_corpus,
     )
@@ -213,74 +207,8 @@ def write_rich_fixture_tree(root: str, n_docs: int = 120) -> list[str]:
         else:
             with open(os.path.join(d, f"{name}.pdf"), "wb") as fh:
                 fh.write(_pdf_with_text(row["raw_text"]))
-        if i % 5 == 0:
-            px = bytes(
-                (i + 3 * x + 7 * y + 11 * c) % 256
-                for y in range(4)
-                for x in range(6)
-                for c in range(3)
-            )
-            with open(os.path.join(d, f"{name}.png"), "wb") as fh:
-                fh.write(encode_png(6, 4, 3, px))
-        if i % 6 == 0:  # audio attachment (hearing recording shape)
-            from swisscourtrulingcorpus_spark.extraction.audiocodec import (
-                encode_wav,
-            )
-
-            samples = [
-                ((i * 17 + 5 * j) % 65536) - 32768 for j in range(i % 20 + 5)
-            ]
-            with open(os.path.join(d, f"{name}.wav"), "wb") as fh:
-                fh.write(encode_wav(8000, 1, samples))
-        if i % 8 == 0:  # video attachment (proceedings clip shape)
-            from swisscourtrulingcorpus_spark.extraction.videocodec import (
-                encode_avi,
-            )
-
-            frames = [
-                bytes(
-                    (i + 5 * f + 7 * x + 11 * y + 13 * c) % 256
-                    for y in range(2)
-                    for x in range(3)
-                    for c in range(3)
-                )
-                for f in range(i % 3 + 1)
-            ]
-            with open(os.path.join(d, f"{name}.avi"), "wb") as fh:
-                fh.write(encode_avi(3, 2, frames))
         names.append(name)
     return names
-
-
-MEDIA_GLOB = "*.{png,wav,avi}"
-
-
-def parse_media_paths(files: DataFrame) -> DataFrame:
-    """binaryFile rows -> (doc_id, kind, payload); shared by the batch
-    media scan and the streaming media decode job (the
-    `parse_file_paths` pattern — one projection, two sources, so batch
-    and streaming cannot silently diverge on a new media kind)."""
-    return files.select(
-        F.regexp_extract("path", r"_(\d+)\.(?:png|wav|avi)$", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.regexp_extract("path", r"\.(png|wav|avi)$", 1).alias("kind"),
-        F.col("content").alias("payload"),
-    )
-
-
-def scan_media_attachments(spark: SparkSession, root: str) -> DataFrame:
-    """Landing-zone media attachments as (doc_id, kind, payload) rows
-    for the `extraction/multimodal.py` decode stages (image / audio /
-    video routed on ``kind``) — doc_id is the fixture's trailing
-    integer; a real ingest would join attachments to documents on
-    (spider, name)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", MEDIA_GLOB)
-        .load(os.path.join(root, "*"))
-    )
-    return parse_media_paths(files)
 
 
 def scan_landing_zone(spark: SparkSession, root: str) -> DataFrame:

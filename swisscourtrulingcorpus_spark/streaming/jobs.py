@@ -730,94 +730,6 @@ def stream_minhash_dedup_job(
     )
 
 
-def stream_media_decode_job(
-    spark: SparkSession,
-    root: str,
-    out_dir: str,
-    checkpoint: str,
-):
-    """The multimodal decode stages as Structured Streaming: media
-    attachments (png/wav/avi) become a binaryFile FILE SOURCE, and each
-    micro-batch routes its rows through the SAME mapInPandas stages as
-    batch (`extraction/multimodal.py::decode_image_features` /
-    `decode_audio_features` / `sample_video_frames`), so streaming and
-    batch feature rows are identical by construction (test-asserted).
-
-    Exactly-once shape: the decode stages are per-row pure functions,
-    so no merge is needed — each kind's features land in a PER-BATCH
-    directory (`<out>/<kind>/batch=<id>`) written with overwrite.  A
-    replayed micro-batch (foreachBatch is at-least-once) rewrites the
-    same directory with the same rows instead of appending duplicates,
-    and the file-source checkpoint guarantees newly-landed media files
-    are decoded exactly once across restarts.  Trigger.AvailableNow:
-    the daily-cron batch shape, restartable as a continuous stream."""
-    import os
-
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        decode_audio_features,
-        decode_image_features,
-        sample_video_frames,
-    )
-    from swisscourtrulingcorpus_spark.sources.ingest import (
-        MEDIA_GLOB,
-        parse_media_paths,
-    )
-
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", MEDIA_GLOB)
-        .load(os.path.join(root, "*"))
-    )
-
-    def _decode(batch, batch_id: int) -> None:
-        media = parse_media_paths(batch).cache()
-        try:
-            stages = {
-                "image": decode_image_features(
-                    media.filter("kind = 'png'").drop("kind")
-                ),
-                "audio": decode_audio_features(
-                    media.filter("kind = 'wav'").drop("kind")
-                ),
-                "video": sample_video_frames(
-                    media.filter("kind = 'avi'").drop("kind"), stride=1
-                ),
-            }
-            for kind, df in stages.items():
-                df.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, kind, f"batch={batch_id}")
-                )
-        finally:
-            # a failed write must not leave the cached micro-batch
-            # pinned across foreachBatch retries (r05 review)
-            media.unpersist()
-
-    return (
-        files.writeStream.foreachBatch(_decode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def _delta_upsert_batch(
     spark,
     delta: DataFrame,
@@ -960,10 +872,9 @@ def stream_curation_job(
     `stream_minhash_dedup_job`; composing it after this job keeps each
     concern restartable on its own checkpoint.
 
-    Exactly-once shape mirrors `stream_media_decode_job`: survivors
-    land in a PER-BATCH directory written with overwrite, so an
-    at-least-once foreachBatch replay rewrites the same rows instead
-    of appending duplicates."""
+    Exactly-once shape: survivors land in a PER-BATCH directory
+    written with overwrite, so an at-least-once foreachBatch replay
+    rewrites the same rows instead of appending duplicates."""
     from swisscourtrulingcorpus_spark.functions.curation import (
         blocklist_keep,
         gopher_rule_columns,
@@ -1352,145 +1263,6 @@ def stream_cms_maintenance_job(
     def _maintain(batch: DataFrame, batch_id: int) -> None:
         cms_maintenance_batch(
             batch, batch_id, store_table, run_tag, value_col, width, depth
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def media_fingerprint_maintenance_batch(
-    batch: DataFrame,
-    batch_id: int,
-    store_table: str,
-    out_dir: str,
-    run_tag: str,
-    id_col: str = "doc_id",
-) -> None:
-    """One micro-batch of the streaming perceptual-fingerprint
-    registry (VERDICT r07 item 4 — what a 100 TB media ingest actually
-    runs): decode the batch's new payloads ONCE through the unified
-    sniff-and-fingerprint router (`extraction/multimodal.py::
-    media_fingerprints` — image dHash / audio energy envelope / video
-    brightness envelope, map-side, payloads never shuffle), probe the
-    slim fingerprints against the accumulated registry with the banded
-    hamming lookup (`operators/dedup.py::banded_hamming_probe`,
-    grouped by modality), add the batch-INTERNAL pairs via the shared
-    `banded_hamming_pairs`, and upsert the new fingerprints into the
-    versioned registry store.  History is only ever touched through
-    its fingerprint table; payload bytes are read exactly once,
-    in the batch that ingested them.
-
-    Every pair of the corpus-wide batch self-join surfaces exactly
-    once, in the micro-batch where its LATER element arrives — the
-    union of all batches' match outputs equals the one-shot
-    `media_neardup_pairs` composition (test-asserted).
-
-    Same crash-replay + OCC contract as :func:`minhash_dedup_batch`:
-    at-least-once foreachBatch replays are no-ops via the
-    (run, batch_id) ledger; a concurrent sibling committer raises
-    ConcurrentWriteError -> re-read base + ledger and retry.
-    Undecodable/unroutable payloads land in the registry as null-
-    fingerprint sentinel rows (re-ingest dedup by id still works; null
-    band keys never equi-join, so they are invisible to the probe)."""
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        media_fingerprints,
-    )
-    from swisscourtrulingcorpus_spark.operators.dedup import (
-        banded_hamming_pairs,
-        banded_hamming_probe,
-    )
-    from swisscourtrulingcorpus_spark.sources.versioned import (
-        ConcurrentWriteError,
-        commit_version,
-        latest_version,
-        read_version,
-    )
-
-    os.makedirs(store_table, exist_ok=True)
-    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
-        return
-    spark = batch.sparkSession
-    fp = media_fingerprints(batch.select(id_col, "payload")).cache()
-    try:
-        new_fp = fp.where(F.col("fp").isNotNull())
-        internal = banded_hamming_pairs(
-            new_fp, "fp", id_col=id_col, group_cols=("modality",)
-        )
-        while True:
-            base = latest_version(store_table)
-            ledger = _read_replay_ledger(store_table)
-            if ledger.get(run_tag, -1) >= batch_id:
-                return  # concurrent twin of this batch already landed
-            if base:
-                stored = read_version(spark, store_table, base)
-                reg_fp = stored.where(F.col("fp").isNotNull()).join(
-                    new_fp.select(id_col), on=id_col, how="left_anti"
-                )
-                vs_registry = banded_hamming_probe(
-                    new_fp,
-                    reg_fp,
-                    "fp",
-                    id_col=id_col,
-                    group_cols=("modality",),
-                )
-                matches = internal.unionByName(vs_registry)
-                # delete+insert for re-ingested ids: a reprocessed doc
-                # replaces its fingerprint instead of duplicating it
-                updated = stored.join(
-                    fp.select(id_col).distinct(), on=id_col, how="left_anti"
-                ).select(*fp.columns).unionByName(fp)
-            else:
-                matches = internal
-                updated = fp
-            matches.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"matches_batch={run_tag}_{batch_id}")
-            )
-            try:
-                new_ledger = dict(ledger)
-                new_ledger[run_tag] = batch_id
-                commit_version(
-                    updated,
-                    store_table,
-                    base_version=base,
-                    meta={
-                        "run": run_tag,
-                        "batch_id": batch_id,
-                        "runs": new_ledger,
-                    },
-                )
-                _write_replay_ledger(store_table, new_ledger)
-                return
-            except ConcurrentWriteError:
-                continue
-    finally:
-        fp.unpersist()
-
-
-def stream_media_fingerprint_job(
-    stream: DataFrame,
-    store_table: str,
-    out_dir: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-):
-    """Continuous perceptual near-dup registry maintenance over a
-    heterogeneous media stream — the streaming twin of the
-    `media_neardup_pairs` batch composition, mirroring the postings /
-    HLL / CMS maintenance jobs: each micro-batch folds through
-    :func:`media_fingerprint_maintenance_batch` (decode -> fingerprint
-    -> banded-hamming match against the registry -> versioned upsert).
-    Trigger.AvailableNow catch-up semantics, restartable as a
-    continuous stream."""
-    os.makedirs(store_table, exist_ok=True)
-    run_tag = checkpoint_run_tag(checkpoint)
-
-    def _maintain(batch: DataFrame, batch_id: int) -> None:
-        media_fingerprint_maintenance_batch(
-            batch, batch_id, store_table, out_dir, run_tag, id_col
         )
 
     return (

@@ -340,10 +340,10 @@ def cusum_drift_batch_replay(
     the exact code `cusum_drift_stream` hands to
     applyInPandasWithState) over a batch table, replaying each key's
     day-ordered rows as ``n_batches`` sequential micro-batch chunks
-    against an in-memory state — the probe-stage gate pattern
-    (`incremental_media_neardup`): the gated query exercises the
-    genuine streaming fold, cross-batch state carry and pending-day
-    semantics included, inside one deterministic batch plan.  The
+    against an in-memory state — the probe-stage gate pattern: the
+    gated query exercises the genuine streaming fold, cross-batch
+    state carry and pending-day semantics included, inside one
+    deterministic batch plan.  The
     result is the final per-key emission: completed (folded) days
     only, the newest day still pending in state — exactly what the
     live stream would have reported after consuming the same rows

@@ -1,6 +1,5 @@
-"""WAV / AVI codec tests: round trips through real bytes, malformed-
-payload guards (incl. the corrupt-dims OOM class), and the Spark-stage
-pass-through contract for undecodable and NULL payloads."""
+"""WAV / AVI codec tests: round trips through real bytes and malformed-
+payload guards (incl. the corrupt-dims OOM class)."""
 
 import struct
 
@@ -122,79 +121,6 @@ def test_avi_with_audio_track_decodes_video():
     assert [bytes(f) for f in out] == frames
 
 
-def test_avi_empty_movi_emits_one_row(spark):
-    """A well-formed container with zero frames must still yield ONE
-    output row — per-doc accounting never drops a doc_id (r05
-    review)."""
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        sample_video_frames,
-    )
-
-    empty = encode_avi(2, 2, [])
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-    )
-    out = sample_video_frames(
-        spark.createDataFrame([(7, empty)], schema), stride=1
-    ).collect()
-    assert len(out) == 1
-    assert out[0]["fmt"] == "avi" and out[0]["frame_idx"] is None
-
-
-def test_audio_video_stage_passthrough(spark):
-    """Undecodable and NULL payloads survive both mapInPandas stages
-    with null stats (same contract as decode_image_features)."""
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        decode_audio_features,
-        sample_video_frames,
-    )
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-    )
-    wav = encode_wav(8000, 1, [100, -100])
-    avi = encode_avi(2, 2, _avi_frames(3, 2, 2, 2), us_per_frame=40000)
-    rows = [(1, None), (2, b"garbage-bytes"), (3, wav), (4, avi)]
-    adf = {r["doc_id"]: r for r in decode_audio_features(
-        spark.createDataFrame(rows, schema)).collect()}
-    assert adf[1]["fmt"] == "missing" and adf[1]["amp_sum"] is None
-    assert adf[2]["fmt"] == "other" and adf[2]["n_frames"] is None
-    assert adf[3]["fmt"] == "wav" and adf[3]["amp_sum"] == 0
-    assert adf[3]["duration_ms"] == 0  # 2 frames / 8000 Hz floors to 0 ms
-    assert adf[4]["fmt"] == "other"  # AVI payload is not audio
-
-    vdf = sample_video_frames(spark.createDataFrame(rows, schema), stride=1).collect()
-    by_doc = {}
-    for r in vdf:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert by_doc[1][0]["fmt"] == "missing" and by_doc[1][0]["pixel_sum"] is None
-    assert by_doc[2][0]["fmt"] == "other"
-    assert by_doc[3][0]["fmt"] == "other"  # WAV payload is not video
-    assert [r["frame_idx"] for r in sorted(by_doc[4], key=lambda r: r["frame_idx"])] == [0, 1]
-    assert all(r["ts_ms"] == r["frame_idx"] * 40 for r in by_doc[4])
-
-
-def test_video_stride_sampling(spark):
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        sample_video_frames,
-    )
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-    )
-    avi = encode_avi(2, 2, _avi_frames(0, 4, 2, 2))
-    out = sample_video_frames(
-        spark.createDataFrame([(1, avi)], schema), stride=2
-    ).collect()
-    assert sorted(r["frame_idx"] for r in out) == [0, 2]
-
-
 def test_wav_codec_property_random_audio():
     """Property: encode->decode is the identity for random sample
     buffers, rates and channel counts."""
@@ -253,83 +179,6 @@ def test_avi_codec_property_random_videos():
         assert [bytes(f) for f in out] == frames
 
     check()
-
-
-def test_audio_frame_energy_edge_rows(spark):
-    """Empty audio and sub-ms sample rates yield ONE accounting row
-    (fmt 'wav', null window stats) instead of vanishing."""
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        audio_frame_energy,
-    )
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-    )
-    empty = encode_wav(8000, 1, [])
-    subms = encode_wav(500, 1, [1, 2, 3])  # 500 Hz -> spf = 0 at 1 ms
-    out = {r["doc_id"]: r for r in audio_frame_energy(
-        spark.createDataFrame([(1, empty), (2, subms)], schema), frame_ms=1
-    ).collect()}
-    assert out[1]["fmt"] == "wav" and out[1]["window_idx"] is None
-    assert out[2]["fmt"] == "wav" and out[2]["energy_sum"] is None
-
-
-def test_audio_frame_energy_windows_values(spark):
-    """Window boundaries and integer energy across a 2-channel WAV."""
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        audio_frame_energy,
-    )
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-    )
-    # sr=2000 -> spf=2 at 1 ms; 5 frames x 2ch = 10 values -> 3 windows
-    samples = [10, -20, 30, -40, 50, -60, 70, -80, 90, -100]
-    wav = encode_wav(2000, 2, samples)
-    rows = sorted(
-        audio_frame_energy(
-            spark.createDataFrame([(1, wav)], schema), frame_ms=1
-        ).collect(),
-        key=lambda r: r["window_idx"],
-    )
-    assert [r["window_idx"] for r in rows] == [0, 1, 2]
-    assert [r["n_values"] for r in rows] == [4, 4, 2]
-    assert [r["energy_sum"] for r in rows] == [10 + 20 + 30 + 40, 50 + 60 + 70 + 80, 90 + 100]
-    assert [r["amp_peak"] for r in rows] == [40, 80, 100]
-    assert [r["start_ms"] for r in rows] == [0, 1, 2]
-
-
-def test_mjpg_roundtrip_and_contracts():
-    """MJPG: encode gray baseline JPEGs into an AVI, decode back
-    bit-exactly (constant 8x8 blocks), and the malformed contracts —
-    dim mismatch and broken frame bytes — surface as
-    UnsupportedVideoError, never a codec crash."""
-    import pytest
-
-    from swisscourtrulingcorpus_spark.extraction.jpegcodec import (
-        encode_jpeg_gray,
-    )
-    from swisscourtrulingcorpus_spark.extraction.videocodec import (
-        UnsupportedVideoError,
-        decode_avi,
-        encode_avi_mjpg,
-    )
-
-    w, h = 12, 9
-    px = [(11 * (x // 8) + 17 * (y // 8) + 5) % 256 for y in range(h) for x in range(w)]
-    jpeg = encode_jpeg_gray(w, h, px)
-    wd, hd, us, frames = decode_avi(encode_avi_mjpg(w, h, [jpeg, jpeg]))
-    assert (wd, hd, len(frames)) == (w, h, 2)
-    assert sum(frames[0]) == 3 * sum(px)  # gray replicated to RGB
-
-    with pytest.raises(UnsupportedVideoError):
-        decode_avi(encode_avi_mjpg(w + 8, h, [jpeg]))  # dim mismatch
-    with pytest.raises(UnsupportedVideoError):
-        decode_avi(encode_avi_mjpg(w, h, [jpeg[:20]]))  # truncated frame
 
 
 def test_g711_expansion_tables_and_idempotence():

@@ -100,41 +100,6 @@ def test_lower_court_udf_distributed(spark):
     assert rows[1].lc.court is None
 
 
-def test_resize_image_stub_aspect_ratio(spark):
-    """Resize metadata math: dims scale to fit max_dim preserving
-    aspect ratio; small images pass through untouched."""
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        resize_image_stub,
-    )
-
-    media = spark.createDataFrame(
-        [(1, b"x", "image/stub", 1024, 768), (2, b"y", "image/stub", 100, 50)],
-        "doc_id long, payload binary, media_type string, width int, height int",
-    )
-    rows = {r.doc_id: r for r in resize_image_stub(media, max_dim=256).collect()}
-    assert (rows[1].width, rows[1].height) == (256, 192)
-    assert (rows[2].width, rows[2].height) == (100, 50)
-
-
-def test_frame_sample_fanout_count(spark, sf_dir):
-    """1→N frame fan-out: total frames == sum over docs of len%5+1."""
-    import pyspark.sql.functions as F
-
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        attach_binary_payload,
-        sample_frames_stub,
-    )
-    from swisscourtrulingcorpus_spark.sources.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(100)
-    media = attach_binary_payload(docs, "text", "doc_id")
-    got = sample_frames_stub(media).count()
-    want = media.select(
-        F.sum(F.length("payload") % 5 + 1).alias("n")
-    ).collect()[0].n
-    assert got == want
-
-
 # ------------------------------------------------ external-corpus TEI ingest
 
 def test_tei_parse_reference_shapes():
@@ -260,67 +225,3 @@ def test_law_codes_to_area(spark):
         1: "civil_law", 2: "public_law", 3: None, 4: None,
         5: None, 6: None, 7: "social_law",
     }
-
-
-def test_resize_image_real_roundtrip_and_bad_rows(spark):
-    """Real resize: a 4x2 BMP box-averages to 2x1 with floor means,
-    the re-encoded BMP parses back to those exact pixels, and the bad
-    rows (null payload, undecodable bytes, sub-2x2 image) pass through
-    as null-stat rows instead of killing the task."""
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import (
-        decode_image,
-        encode_bmp24,
-    )
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        _resize_box2,
-        resize_image_features,
-    )
-
-    w, h = 4, 2
-    px = bytes((7 * i) % 256 for i in range(w * h * 3))
-    ow, oh, out = _resize_box2(w, h, 3, px)
-    assert (ow, oh) == (2, 1)
-    for X in range(ow):
-        for c in range(3):
-            s = (
-                px[(2 * X) * 3 + c]
-                + px[(2 * X + 1) * 3 + c]
-                + px[(w + 2 * X) * 3 + c]
-                + px[(w + 2 * X + 1) * 3 + c]
-            )
-            assert out[X * 3 + c] == s // 4
-
-    media = spark.createDataFrame(
-        [
-            (1, encode_bmp24(w, h, px)),
-            (2, None),
-            (3, b"not an image at all"),
-            (4, encode_bmp24(1, 1, bytes(3))),
-        ],
-        "doc_id: long, payload: binary",
-    )
-    rows = {r.doc_id: r for r in resize_image_features(media).collect()}
-    ok = rows[1]
-    assert (ok.out_w, ok.out_h, ok.out_pixel_sum) == (2, 1, sum(out))
-    # parse the re-encoded BMP size contract
-    rw, rh, rn, rpx = decode_image(encode_bmp24(ow, oh, bytes(out)))
-    assert (rw, rh, bytes(rpx)) == (ow, oh, bytes(out))
-    assert rows[2].fmt == "missing" and rows[2].out_pixel_sum is None
-    assert rows[3].fmt == "other" and rows[3].out_w is None
-    assert rows[4].fmt == "bmp_tiny" and rows[4].out_pixel_sum is None
-
-
-def test_resize_gray_alpha_replicates_gray_not_alpha(spark):
-    """2-channel (gray+alpha) PNGs: the BMP re-encode must replicate
-    channel 0 (gray) — the old i//3 stride walked into alpha bytes
-    (r06 review, reproduced)."""
-    from swisscourtrulingcorpus_spark.extraction.multimodal import _resize_box2
-
-    w, h, nch = 4, 2, 2
-    # gray distinct from alpha so a stride bug is visible
-    px = bytes(
-        (35 if c == 0 else 200) for _ in range(w * h) for c in range(nch)
-    )
-    ow, oh, out = _resize_box2(w, h, nch, px)
-    rgb = bytes(out[(i // 3) * nch] for i in range(ow * oh * 3))
-    assert set(rgb) == {35}, rgb

@@ -124,35 +124,3 @@ def test_gif_differing_local_color_table_raises():
     )
     _, _, _, frames = decode_gif(base[:-1] + img2 + b"\x3b")
     assert len(frames) == 2
-
-
-def test_gif_frame_stage_one_row_per_bad_payload(spark):
-    """A payload whose LATER frame is undecodable must yield exactly
-    ONE null-stat row — not frame-0 rows plus a null row (r06 review).
-    Built by appending a frame whose indices exceed the palette."""
-    import struct
-
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        sample_gif_frames,
-    )
-
-    pal = [(1, 1, 1), (2, 2, 2)]
-    base = encode_gif(3, 2, pal, [bytes([0, 1, 0, 1, 0, 1])])
-    # second frame encodes index 3 (>= padded table size 2)
-    img = (
-        b"\x2c"
-        + struct.pack("<HHHH", 0, 0, 3, 2)
-        + b"\x00"
-        + bytes([2])
-        + _sub_blocks(_lzw_encode(2, bytes([3, 3, 3, 3, 3, 3])))
-    )
-    bad = base[:-1] + img + b"\x3b"
-    media = spark.createDataFrame(
-        [(1, bad), (2, base)], "doc_id: long, payload: binary"
-    )
-    rows = sample_gif_frames(media).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert len(by_doc[1]) == 1 and by_doc[1][0].fmt == "gif_undecodable"
-    assert len(by_doc[2]) == 1 and by_doc[2][0].fmt == "gif"

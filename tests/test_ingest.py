@@ -43,6 +43,22 @@ def test_ingest_end_to_end_and_incremental(spark, tmp_path):
         assert "Das Gesuch wird abgewiesen." in r["text"]
         assert r["pdf_url"] and r["html_url"] is None
 
+    # stray non-document files (images, audio, video: opaque bytes, no
+    # codec) stay out of the document rows, whether they share a
+    # document's name or not
+    for spider, name in list(rows)[:4]:
+        for i, ext in enumerate(("png", "wav", "avi")):
+            d = os.path.join(root, spider)
+            with open(os.path.join(d, f"{name}.{ext}"), "wb") as fh:
+                fh.write(bytes(range(i, 256)))
+            with open(os.path.join(d, f"attachment_{i}.{ext}"), "wb") as fh:
+                fh.write(b"\x00\xff" * 64)
+    with_strays = {
+        (r["spider"], r["name"]): r.asDict()
+        for r in ingest_landing_zone(spark, root).collect()
+    }
+    assert with_strays == rows
+
     # incremental: unchanged tree -> zero new rows; half manifest ->
     # exactly the other half
     manifest = docs.select("spider", "name")

@@ -1,6 +1,7 @@
 """Round-4 units: rule-based lemma approximation (E11 fidelity,
-reference `abstract_preprocessor.py:387-410`) and the pure-stdlib
-PNG/BMP codec behind the real multimodal decode."""
+reference `abstract_preprocessor.py:387-410`), the training-data
+operators (vocabulary application, length shards, prefix sums,
+sequence packing) and the pure-stdlib PNG/BMP codec."""
 
 from __future__ import annotations
 
@@ -116,33 +117,6 @@ def test_unsupported_formats_raise():
         decode_image(b"\xff\xd8\xff\xe0 JFIF-ish")
     with pytest.raises(UnsupportedImageError):
         decode_png(b"\x89PNG\r\n\x1a\n" + b"\x00" * 20)
-
-
-def test_decode_image_features_end_to_end(spark):
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        decode_image_features,
-        generate_image_fixture,
-    )
-
-    df = spark.range(8).withColumnRenamed("id", "doc_id")
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in decode_image_features(generate_image_fixture(df)).collect()
-    }
-    assert len(got) == 8
-    for d, row in got.items():
-        w, h = d % 4 + 2, d % 3 + 2
-        nch = 4 if (d % 2 == 0 and d % 4 == 0) else 3
-        vals = [
-            (d + 7 * x + 13 * y + 29 * c) % 256
-            for y in range(h)
-            for x in range(w)
-            for c in range(nch)
-        ]
-        assert row["fmt"] == ("png" if d % 2 == 0 else "bmp")
-        assert (row["width"], row["height"], row["channels"]) == (w, h, nch)
-        assert row["pixel_sum"] == sum(vals)
-        assert row["px_min"] == min(vals) and row["px_max"] == max(vals)
 
 
 def test_apply_token_vocab_paths_agree(spark):

@@ -105,13 +105,11 @@ def test_whole_stage_codegen_covers_agg(spark, sf_dir):
 def test_no_python_udf_in_relational_plans(spark, sf_dir):
     """Relational + dedup/text layers must stay JVM-side: no
     BatchEvalPython / ArrowEvalPython in any oracle-gated plan except
-    the explicitly-Python ones (uuid5, multimodal)."""
+    the explicitly-Python ones (uuid5, the extraction chain)."""
     from swisscourtrulingcorpus_spark.plans.registry import QUERY_SPECS
 
     python_ok = {
         "uuid5_document_ids",
-        "multimodal_features",
-        "multimodal_frame_sample",
         # r03 extraction-chain gates: the pandas_udf layer IS the thing
         # under test (Arrow-batched, map-side; see extraction_queries.py)
         "extraction_outcome_counts",
@@ -582,50 +580,15 @@ def test_phrase_search_broadcasts_terms(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_dhash_pairs_no_allpairs_join(spark, sf_dir):
-    """The perceptual-hash pair join must be the banded equi-join on
-    (band, band_key) — a cartesian/nested-loop over fingerprints is the
+def test_simhash_pairs_no_allpairs_join(spark, sf_dir):
+    """The SimHash pair join must be the banded equi-join on
+    (band, band_key) — a cartesian/nested-loop over signatures is the
     all-pairs plan the banding exists to avoid."""
-    from swisscourtrulingcorpus_spark.plans.extra_queries import (
-        image_dhash_neardup_pairs,
+    from swisscourtrulingcorpus_spark.plans.text_queries import (
+        q_simhash_hamming_pairs,
     )
 
-    plan = _final_plan(image_dhash_neardup_pairs(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_audio_pairs_no_allpairs_join(spark, sf_dir):
-    """The audio fingerprint pair join must be the banded equi-join —
-    same contract as the image twin."""
-    from swisscourtrulingcorpus_spark.plans.extra_queries import (
-        audio_fingerprint_neardup_pairs,
-    )
-
-    plan = _final_plan(audio_fingerprint_neardup_pairs(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_media_neardup_decode_stage_never_shuffles(spark, sf_dir):
-    """VERDICT r07 item 7 plan contract: the cross-modality near-dup
-    composition keeps decode+fingerprint entirely map-side — the
-    binary `payload` column must never enter an Exchange (only slim
-    (modality, id, fp, band) rows shuffle), and the pair join must be
-    the grouped banded equi-join, never an all-pairs fallback."""
-    import re
-
-    from swisscourtrulingcorpus_spark.plans.extra_queries import (
-        media_neardup_pairs,
-    )
-
-    df = media_neardup_pairs(spark, sf_dir)
-    static = _static_plan(df)
-    for node in re.split(r"\n(?=\(\d+\) )", static):
-        header = node.split("\n", 1)[0]
-        if "Exchange" in header:
-            assert "payload" not in node, node
-    plan = _final_plan(df)
+    plan = _final_plan(q_simhash_hamming_pairs(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 

@@ -1,9 +1,10 @@
 """Property/edge tests for the round-7 operators: interval overlap,
-positional phrase search, perceptual dHash.  Each operator's gate
-already hash-matches a naive DuckDB oracle at sf0.01; these tests pin
-the semantics on adversarial small inputs the fixture distribution may
-never produce (touching intervals, bucket-boundary spans, repeated
-phrase terms, phrase longer than doc, undecodable payloads)."""
+positional phrase search, WordPiece, k-core, multi-touch attribution.
+Each operator's gate already hash-matches a naive DuckDB oracle at
+sf0.01; these tests pin the semantics on adversarial small inputs the
+fixture distribution may never produce (touching intervals,
+bucket-boundary spans, repeated phrase terms, phrase longer than
+doc)."""
 
 from __future__ import annotations
 
@@ -83,31 +84,6 @@ def test_phrase_search_repeated_terms_and_boundaries(spark):
     }
 
 
-def test_dhash_undecodable_and_flat_images(spark):
-    """Undecodable payloads fingerprint to NULL (pass-through contract);
-    a flat image (all pixels equal) hashes to 0; two identical images
-    hash identically through the full encode->decode round trip."""
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import encode_bmp24
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        image_dhash_fingerprints,
-    )
-
-    flat = encode_bmp24(9, 7, bytes([50] * (9 * 7 * 3)))
-    ramp_px = bytes(
-        v for y in range(7) for x in range(9) for v in ((x * 30) % 256,) * 3
-    )
-    ramp = encode_bmp24(9, 7, ramp_px)
-    media = spark.createDataFrame(
-        [(1, bytearray(flat)), (2, bytearray(ramp)), (3, bytearray(ramp)),
-         (4, bytearray(b"not an image")), (5, None)],
-        "doc_id: long, payload: binary",
-    )
-    got = {r["doc_id"]: r["dhash"] for r in image_dhash_fingerprints(media).collect()}
-    assert got[1] == 0
-    assert got[2] == got[3] and got[2] > 0
-    assert got[4] is None and got[5] is None
-
-
 def test_wordpiece_greedy_and_unk(spark):
     """Greedy longest-match: with vocab from 'tab table ble' the word
     'table' must segment as the LONGEST initial piece ('table' itself,
@@ -138,39 +114,6 @@ def test_wordpiece_greedy_and_unk(spark):
     }
     assert seg2["qq"] == (1, "[UNK]")
     assert seg2["tabble"][1].startswith("tab ##b")
-
-
-def test_dhash_wide_image_no_int64_overflow(spark):
-    """Review r07: an image with >= 8 rows and >= 9 columns can set hash
-    bit 63; the fingerprint must fold to signed two's complement instead
-    of crashing the Arrow batch with an out-of-range uint64.  Build a
-    16x16 gradient whose (7,7)->(7,8) comparison sets bit 63 and check
-    the emitted value is negative (bit 63 set, folded) and the XOR
-    hamming arithmetic still works."""
-    from pyspark.sql import functions as F
-
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import encode_bmp24
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        image_dhash_fingerprints,
-    )
-
-    # every right neighbor brighter -> ALL comparison bits set,
-    # including r=7, c=7 (bit 63)
-    px = bytes(
-        v
-        for y in range(16)
-        for x in range(16)
-        for v in ((x * 10) % 200,) * 3
-    )
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_bmp24(16, 16, px)))] * 2,
-        "doc_id: long, payload: binary",
-    ).withColumn("doc_id", F.monotonically_increasing_id())
-    rows = image_dhash_fingerprints(media).collect()
-    assert len(rows) == 2
-    vals = [r["dhash"] for r in rows]
-    assert vals[0] == vals[1]
-    assert vals[0] == -1  # all 64 bits set, folded to signed
 
 
 def test_k_core_cascade_and_nonconvergence_error(spark):
@@ -252,88 +195,3 @@ def test_multitouch_credit_conservation(spark, sf_dir):
     )
     assert conversions > 0
     assert total_credit == conversions * 1_000_000
-
-
-def test_audio_fingerprint_edges(spark):
-    """Null/undecodable payloads fingerprint to NULL; a stereo clip
-    de-interleaves to channel 0; a flat clip hashes to 0; identical
-    clips hash identically through the real encode->decode round
-    trip; the pigeonhole guard rejects an over-threshold call."""
-    import pytest
-
-    from swisscourtrulingcorpus_spark.extraction.audiocodec import encode_wav
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        _AU_WIN,
-        _AU_WINDOWS,
-        audio_energy_fingerprints,
-    )
-    from swisscourtrulingcorpus_spark.operators.dedup import (
-        banded_hamming_pairs,
-    )
-
-    n = _AU_WINDOWS * _AU_WIN
-    rising = [((i // _AU_WIN) * 13) % 32000 for i in range(n)]
-    flat = [100] * n
-    # stereo: channel 0 = rising, channel 1 = junk that would flip
-    # bits if the de-interleave were wrong
-    stereo = []
-    for i in range(n):
-        stereo += [rising[i], (31_000 - rising[i]) % 32000]
-    media = spark.createDataFrame(
-        [
-            (1, bytearray(encode_wav(8000, 1, rising))),
-            (2, bytearray(encode_wav(8000, 1, rising))),
-            (3, bytearray(encode_wav(8000, 1, flat))),
-            (4, bytearray(encode_wav(8000, 2, stereo))),
-            (5, bytearray(b"junk")),
-            (6, None),
-        ],
-        "doc_id: long, payload: binary",
-    )
-    got = {r["doc_id"]: r["ahash"] for r in audio_energy_fingerprints(media).collect()}
-    assert got[1] == got[2] and got[1] > 0
-    assert got[3] == 0
-    assert got[4] == got[1]  # stereo channel-0 == the mono clip
-    assert got[5] is None and got[6] is None
-
-    fp = audio_energy_fingerprints(media).where("ahash IS NOT NULL")
-    with pytest.raises(AssertionError, match="pigeonhole"):
-        banded_hamming_pairs(fp, "ahash", threshold=5, n_bands=4)
-
-
-def test_video_fingerprint_edges(spark):
-    """Null/undecodable payloads -> NULL vhash; flat-brightness clips
-    hash to 0; identical clips hash identically through the real AVI
-    encode->decode round trip; a short clip (< 57 frames) still
-    fingerprints from the frames it has."""
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        _VI_FRAMES,
-        _VI_H,
-        _VI_W,
-        video_brightness_fingerprints,
-    )
-    from swisscourtrulingcorpus_spark.extraction.videocodec import encode_avi
-
-    npx = _VI_W * _VI_H * 3
-    rising = [bytes([(f * 4) % 250] * npx) for f in range(_VI_FRAMES)]
-    flat = [bytes([77] * npx)] * _VI_FRAMES
-    short = [bytes([f * 50] * npx) for f in range(3)]
-    media = spark.createDataFrame(
-        [
-            (1, bytearray(encode_avi(_VI_W, _VI_H, rising))),
-            (2, bytearray(encode_avi(_VI_W, _VI_H, rising))),
-            (3, bytearray(encode_avi(_VI_W, _VI_H, flat))),
-            (4, bytearray(encode_avi(_VI_W, _VI_H, short))),
-            (5, bytearray(b"junk")),
-            (6, None),
-        ],
-        "doc_id: long, payload: binary",
-    )
-    got = {
-        r["doc_id"]: r["vhash"]
-        for r in video_brightness_fingerprints(media).collect()
-    }
-    assert got[1] == got[2] and got[1] > 0
-    assert got[3] == 0
-    assert got[4] == 0b11  # 3 rising frames -> bits 0 and 1 set
-    assert got[5] is None and got[6] is None

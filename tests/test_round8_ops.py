@@ -90,77 +90,27 @@ def test_coreness_nonconvergence_raises_and_empty_is_empty(spark):
     assert coreness(empty).count() == 0
 
 
-def test_banded_hamming_group_cols_isolate_groups(spark):
-    """group_cols must scope pairing: identical hashes in different
-    groups never pair, and the grouped output carries the group
-    column; without group_cols the same table pairs across groups."""
+def test_banded_hamming_pairs_exact_and_guards_recall(spark):
+    """Every pair within the threshold emits exactly once, id-ordered,
+    with its exact hamming distance; a threshold the bands cannot
+    cover (pigeonhole recall needs threshold <= n_bands - 1) is
+    rejected instead of silently losing pairs."""
     from swisscourtrulingcorpus_spark.operators.dedup import (
         banded_hamming_pairs,
     )
 
-    rows = [(1, "x", 5), (2, "x", 5), (3, "y", 5), (4, "y", 4)]
-    fp = spark.createDataFrame(rows, "doc_id: long, modality: string, fp: long")
-    got = {
-        (r.modality, r.doc_a, r.doc_b, r.hamming)
-        for r in banded_hamming_pairs(
-            fp, "fp", group_cols=("modality",)
-        ).collect()
-    }
-    assert got == {("x", 1, 2, 0), ("y", 3, 4, 1)}
-
-    ungrouped = {
-        (r.doc_a, r.doc_b)
+    rows = [(1, 5), (2, 5), (3, 5), (4, 4)]
+    fp = spark.createDataFrame(rows, "doc_id: long, fp: long")
+    got = [
+        (r.doc_a, r.doc_b, r.hamming)
         for r in banded_hamming_pairs(fp, "fp").collect()
-    }
-    assert ungrouped == {(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)}
+    ]
+    assert sorted(got) == [
+        (1, 2, 0), (1, 3, 0), (1, 4, 1), (2, 3, 0), (2, 4, 1), (3, 4, 1)
+    ]
 
-
-def test_media_fingerprints_match_single_modality_hashes(spark):
-    """The unified sniff-and-fingerprint pass must route each payload
-    to its modality's hash and reproduce the single-modality value
-    exactly (the composition adds dispatch, never a different
-    fingerprint)."""
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        _ahash_value,
-        _dhash_value,
-        _media_neardup_payload,
-        _thash_value,
-        _vhash_value,
-        generate_media_neardup_fixture,
-        media_fingerprints,
-    )
-
-    docs = spark.range(32).withColumnRenamed("id", "doc_id")
-    got = {
-        r.doc_id: (r.modality, r.fp)
-        for r in media_fingerprints(
-            generate_media_neardup_fixture(docs)
-        ).collect()
-    }
-    hashers = {0: ("image", _dhash_value), 1: ("audio", _ahash_value),
-               2: ("video", _vhash_value), 3: ("text", _thash_value)}
-    for d in range(32):
-        modality, hasher = hashers[(d // 8) % 4]
-        assert got[d] == (modality, hasher(_media_neardup_payload(d))), d
-
-
-def test_media_fingerprints_unknown_and_missing_payloads(spark):
-    """Unroutable bytes and null payloads emit (unknown, null) rows —
-    one bad row never kills the scan, and the gate's fp-not-null
-    filter drops them before the join."""
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        media_fingerprints,
-    )
-
-    media = spark.createDataFrame(
-        [(1, bytearray(b"\x00garbage")), (2, None)],
-        "doc_id: long, payload: binary",
-    )
-    rows = {
-        r.doc_id: (r.modality, r.fp)
-        for r in media_fingerprints(media).collect()
-    }
-    assert rows == {1: ("unknown", None), 2: ("unknown", None)}
+    with pytest.raises(AssertionError, match="pigeonhole"):
+        banded_hamming_pairs(fp, "fp", threshold=5, n_bands=4)
 
 
 def test_cdc_cut_points_properties():
@@ -361,50 +311,6 @@ def test_integer_ewma_known_sequence_and_ties(spark):
         for r in integer_ewma_by_key(df, "k", ["o1", "o2"], "v").collect()
     }
     assert got == {1: (3, 6), 2: (1, 42), 3: (2, 3)}
-
-
-def test_banded_probe_exact_recall_vs_bruteforce(spark):
-    """The asymmetric registry probe must return EXACTLY the
-    brute-force (probe x registry, hamming <= 3) set on random 56-bit
-    fingerprints with planted 0-3-bit flips — perfect pigeonhole
-    recall, no false positives, each candidate emitted exactly once
-    (first-matching-band), and a probe sharing a registry row's id
-    never self-matches on replay."""
-    import random
-
-    from swisscourtrulingcorpus_spark.operators.dedup import (
-        banded_hamming_probe,
-    )
-
-    rng = random.Random(8)
-    reg = [(i, rng.getrandbits(56)) for i in range(60)]
-    probes, pid = [], 1000
-    for _, h in reg[:20]:
-        x = h
-        for b in rng.sample(range(56), rng.randrange(0, 4)):
-            x ^= 1 << b
-        probes.append((pid, x))
-        pid += 1
-    probes += [(pid + j, rng.getrandbits(56)) for j in range(20)]
-    # replayed row: same id AND same hash as a registry row — the id
-    # exclusion must keep it out even at hamming 0
-    probes.append(reg[0])
-
-    brute = {
-        (p, r, bin(ph ^ rh).count("1"))
-        for p, ph in probes
-        for r, rh in reg
-        if p != r and bin(ph ^ rh).count("1") <= 3
-    }
-    pdf = spark.createDataFrame(probes, "doc_id: long, fp: long")
-    rdf = spark.createDataFrame(reg, "doc_id: long, fp: long")
-    got = [
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in banded_hamming_probe(pdf, rdf, "fp").collect()
-    ]
-    assert len(got) == len(set(got))  # single emission per candidate
-    assert set(got) == brute
-    assert any(h == 0 for _, _, h in got)  # planted exact dups found
 
 
 def test_nearest_join_direction_ties_and_tolerance(spark):

@@ -106,28 +106,6 @@ def test_stateful_ewma_multichunk_carries_state_across_batches():
     assert got == want
 
 
-def test_media_sniffer_bm_prefixed_text_falls_through():
-    """A UTF-8 text document that happens to start with 'BM' (the BMP
-    magic) must not be dropped as 'unknown' — on image-decode failure
-    the router falls through to the text SimHash (ADVICE r08 low)."""
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        _thash_value,
-        media_fingerprint_rows,
-    )
-
-    doc = b"BM25 scoring ranks documents by term frequency and length"
-    rows = media_fingerprint_rows([(1, doc)])
-    assert rows == [
-        {"doc_id": 1, "modality": "text", "fp": _thash_value(doc)}
-    ]
-    assert rows[0]["fp"] is not None
-
-    # genuinely undecodable binary without any known magic stays unknown
-    junk = b"BM\x00\xff\xfe\x01binary"
-    rows = media_fingerprint_rows([(2, junk)])
-    assert rows[0]["modality"] == "unknown" and rows[0]["fp"] is None
-
-
 def test_ordered_funnel_quoted_step_names(spark):
     """Step names containing quotes must survive the unpivot (ADVICE
     r08 low: the old stack() string interpolation broke at analysis

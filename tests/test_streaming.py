@@ -430,73 +430,6 @@ def test_sibling_runs_race_no_lost_output_no_double_ingest(spark, tmp_path):
     assert sorted(r["doc_id"] for r in spark.read.parquet(out).collect()) == ids
 
 
-def test_stream_media_decode_matches_batch(spark, tmp_path):
-    """The media decode stages composed with a streaming binaryFile
-    source produce EXACTLY the batch stages' rows (per-row pure
-    transforms), a restart over the unchanged tree decodes nothing
-    new, and newly-landed files decode exactly once."""
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        decode_audio_features,
-        decode_image_features,
-        sample_video_frames,
-    )
-    from swisscourtrulingcorpus_spark.sources.ingest import (
-        scan_media_attachments,
-        write_rich_fixture_tree,
-    )
-    from swisscourtrulingcorpus_spark.streaming.jobs import (
-        stream_media_decode_job,
-    )
-
-    root = str(tmp_path / "zone")
-    out = str(tmp_path / "features")
-    ckpt = str(tmp_path / "ckpt")
-    write_rich_fixture_tree(root, n_docs=48)
-
-    q = stream_media_decode_job(spark, root, out, ckpt)
-    q.awaitTermination()
-
-    media = scan_media_attachments(spark, root).cache()
-    batch = {
-        "image": decode_image_features(media.filter("kind = 'png'").drop("kind")),
-        "audio": decode_audio_features(media.filter("kind = 'wav'").drop("kind")),
-        "video": sample_video_frames(
-            media.filter("kind = 'avi'").drop("kind"), stride=1
-        ),
-    }
-    for kind, bdf in batch.items():
-        got = spark.read.parquet(f"{out}/{kind}/batch=*")
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, bdf.collect())
-        ), kind
-
-    # restart over the unchanged tree: the file-source checkpoint skips
-    # everything — no new batch directories appear
-    import os
-
-    dirs_before = {
-        k: sorted(os.listdir(os.path.join(out, k))) for k in batch
-    }
-    q2 = stream_media_decode_job(spark, root, out, ckpt)
-    q2.awaitTermination()
-    for k in batch:
-        assert sorted(os.listdir(os.path.join(out, k))) == dirs_before[k]
-
-    # a newly-landed file is decoded exactly once on the next run
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import encode_png
-
-    late = os.path.join(root, "CH_BGer", "late_doc_9999.png")
-    with open(late, "wb") as fh:
-        fh.write(encode_png(2, 2, 3, bytes(range(12))))
-    q3 = stream_media_decode_job(spark, root, out, ckpt)
-    q3.awaitTermination()
-    img = spark.read.parquet(f"{out}/image/batch=*")
-    late_rows = img.filter("doc_id = 9999").collect()
-    assert len(late_rows) == 1 and late_rows[0]["fmt"] == "png"
-    assert img.count() == batch["image"].count() + 1
-    media.unpersist()
-
-
 def test_stream_postings_maintenance_equals_batch_rebuild(spark, sf_dir, tmp_path):
     """Streaming index maintenance == batch rebuild: stream the
     documents corpus in micro-batches into the versioned postings
@@ -955,82 +888,6 @@ def test_stream_cms_maintenance_equals_batch_and_replay_guard(spark, tmp_path):
 
     run_once()
     assert latest_version(store) == v
-
-
-def test_stream_media_fingerprint_registry_equals_batch(spark, tmp_path):
-    """Streaming perceptual-fingerprint registry (VERDICT r07 item 4)
-    == the one-shot batch composition: stream the heterogeneous media
-    fixture in micro-batches; the final versioned registry must equal
-    a fresh `media_fingerprints` pass (null sentinels included), and
-    the union of per-batch match outputs must equal the one-shot
-    grouped `banded_hamming_pairs` self-join — every pair surfaces
-    exactly once, in the batch where its later element arrived.  A
-    rerun over the same checkpoint and a direct replay of a committed
-    batch id must both be no-ops."""
-    import os
-
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        generate_media_neardup_fixture,
-        media_fingerprints,
-    )
-    from swisscourtrulingcorpus_spark.operators.dedup import (
-        banded_hamming_pairs,
-    )
-    from swisscourtrulingcorpus_spark.sources.versioned import (
-        latest_version,
-        read_version,
-    )
-    from swisscourtrulingcorpus_spark.streaming.jobs import (
-        checkpoint_run_tag,
-        media_fingerprint_maintenance_batch,
-        stream_media_fingerprint_job,
-    )
-
-    docs = spark.range(96).withColumnRenamed("id", "doc_id")
-    media = generate_media_neardup_fixture(docs)
-    stage = str(tmp_path / "media_in")
-    media.repartition(4).write.parquet(stage)
-    store = str(tmp_path / "fp_store")
-    out = str(tmp_path / "matches")
-    ckpt = str(tmp_path / "ckpt")
-
-    def _run():
-        stream = (
-            spark.readStream.schema(spark.read.parquet(stage).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = stream_media_fingerprint_job(stream, store, out, ckpt)
-        q.awaitTermination()
-
-    _run()
-    v1 = latest_version(store)
-    reg = read_version(spark, store, v1)
-    want_fp = sorted(map(tuple, media_fingerprints(media).collect()))
-    assert sorted(map(tuple, reg.select("doc_id", "modality", "fp").collect())) == want_fp
-
-    def norm(df):
-        return sorted(
-            (r.modality, min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b), r.hamming)
-            for r in df.collect()
-        )
-
-    got_pairs = spark.read.parquet(os.path.join(out, "*"))
-    fp_all = media_fingerprints(media).where("fp is not null")
-    want_pairs = banded_hamming_pairs(fp_all, "fp", group_cols=("modality",))
-    assert norm(got_pairs) == norm(want_pairs)
-    assert got_pairs.count() > 0
-
-    # restart over the same checkpoint: nothing new -> no new version
-    _run()
-    assert latest_version(store) == v1
-
-    # crash-replay: re-applying a committed batch id is a no-op
-    run_tag = checkpoint_run_tag(ckpt)
-    media_fingerprint_maintenance_batch(
-        media.limit(5), 0, store, out, run_tag
-    )
-    assert latest_version(store) == v1
 
 
 def test_stream_cdc_chunk_store_equals_batch(spark, sf_dir, tmp_path):

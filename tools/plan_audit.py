@@ -50,7 +50,7 @@ def main() -> None:
                 # EvalPython covers Batch/ArrowEvalPython (udf/
                 # pandas_udf); MapInPandas / FlatMapGroupsInPandas are
                 # separate exec nodes and must be flagged too or the
-                # codec gates under-report as python-free (r05)
+                # mapInPandas gates under-report as python-free (r05)
                 "python": "yes"
                 if any(
                     k in plan

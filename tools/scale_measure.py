@@ -106,28 +106,16 @@ QUERIES = [
     ("sliding_topk_event_types", "(window, type) partial agg; rank input bounded by type domain"),
     ("event_transition_counts", "per-user lead window over slim columns; 25-cell matrix out"),
     ("hll_distinct_per_hour", "per-window register exchange capped at 64 rows/window"),
-    # round-6g extension: media decode family (pure map-side codecs —
-    # zero shuffle by construction, wall linear in payload bytes)
-    ("image_resize_stats", "decode -> box filter -> re-encode, all inside mapInPandas"),
-    ("gif_frame_sample_stats", "LZW decode + frame fan-out, map-side"),
-    ("media_router_stats", "per-row sniff dispatch to 4 codecs, map-side"),
-    ("g711_decode_stats", "table-free formula expansion per byte, map-side"),
     # round-7 additions
-    ("adpcm_decode_stats", "stateful block recurrence, still pure map-side"),
     ("phrase_search_documents", "broadcast term join + anchor agg; only phrase-term postings move"),
     ("interval_overlap_events", "bucket-exploded equi-join, <= 2 buckets/interval"),
-    ("image_dhash_neardup_pairs", "map-side decode+hash; banded hamming join over slim fingerprints"),
     ("wordpiece_segmentation", "greedy rounds over the DISTINCT-WORD table, broadcast vocab"),
     ("preference_pairs_documents", "broadcast-model scoring + per-lang slim rank/self-join"),
     ("kcore_citation_clusters", "bounded-round peel, (bigint,bigint) shuffles only"),
     ("wordpiece_token_counts", "apply-tokenizer: broadcast segmentation join, corpus one explode"),
     ("multitouch_attribution_events", "user-key equi-join + per-(user,purchase) windows, 8-cell report"),
-    ("audio_fingerprint_neardup_pairs", "map-side decode+energy hash; shared banded hamming join"),
-    ("video_fingerprint_neardup_pairs", "map-side AVI decode+temporal hash; shared banded hamming join"),
     # round-8 additions
     ("quality_quota_sample", "NB scoring map-side; per-bucket quota rank over slim (id, score) rows"),
-    ("media_neardup_pairs", "one sniff+fingerprint pass, payloads never shuffle; grouped banded join"),
-    ("incremental_media_neardup", "asymmetric registry probe; candidates bounded by shared bands"),
     ("coreness_citation_nodes", "h-index rounds: slim (bigint,bigint) shuffles, depth-bounded"),
     ("cdc_chunk_dedup", "map-side rolling-hash chunking; one groupBy on fixed-width chunk keys"),
     ("windowed_funnel_events", "filtered min-agg chain; slim (user, us) joins, 3-cell report"),

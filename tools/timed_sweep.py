@@ -3,7 +3,7 @@
 sorted table — the profiling pass of the r11 optimization round
 (guide §1: measure first).  NOT a correctness tool (driver_sim is) and
 NOT the driver bench (bench.py is): this finds the expensive tail of
-the full 262-gate registry so optimization effort lands where the time
+the full gate registry so optimization effort lands where the time
 is.
 
 Usage: python tools/timed_sweep.py [SF_DIR] [--runs N] [--out FILE]
@@ -64,7 +64,7 @@ def main() -> None:
         )
         # Per-gate cleanup (VERDICT r11 item 7): eager report gates
         # leave localCheckpoint RDD blocks and cached plans behind, and
-        # over a one-session 262-gate sweep that accumulation inflated
+        # over a one-session full-registry sweep that accumulation inflated
         # LATE gates up to 10x — the sweep lied about where the time
         # was.  Dropping gate-scoped cache entries and checkpoint
         # blocks between gates keeps every measurement a fresh-state
