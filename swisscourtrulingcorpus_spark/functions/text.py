@@ -46,16 +46,10 @@ def clean_text_col(col: Column | str) -> Column:
     return F.trim(c)
 
 
-def token_count_ws(col: Column | str) -> Column:
-    """Whitespace token count (num_tokens analogue, SURVEY.md §1.2).
-
-    String column names take the parsed-SQL twin (one py4j call,
-    analyzed-plan-identical — r12 session 2); Column inputs keep the
-    Column path."""
-    if isinstance(col, str) and col.isidentifier():
-        return F.expr(token_count_ws_sql(f"`{col}`"))
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.split(F.trim(c), r"\s+"))
+def token_count_ws(col: str) -> Column:
+    """Whitespace token count of the column ``col`` (num_tokens
+    analogue, SURVEY.md §1.2); :func:`token_count_ws_sql` is its body."""
+    return F.expr(token_count_ws_sql(f"`{col}`"))
 
 
 # BPE-ish pre-tokenizer: words | single digits | single punctuation —
@@ -95,24 +89,20 @@ def quality_features(col: Column | str) -> dict[str, Column]:
     }
 
 
-def stopword_hits(col: Column | str, lang: str) -> Column:
-    """Count of words belonging to ``lang``'s stopword list."""
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.split(F.trim(F.lower(c)), r"\s+")
-    stops = STOPWORDS[lang]
-    return F.size(F.filter(words, lambda w: w.isin(*[F.lit(s) for s in stops])))
-
-
 def token_count_ws_sql(col_expr: str) -> str:
-    """SQL text of :func:`token_count_ws` over an expression string
-    (r12, session 2 — construction-cost twin, same technique as
-    functions/hashing.py; keep in lockstep with the Column form)."""
+    """SQL text of the whitespace token count over an expression string
+    (r12, session 2 — parsed SQL text, same technique as
+    functions/hashing.py: one py4j call per use)."""
     return f"size(split(trim({col_expr}), '\\\\s+'))"
 
 
 def stopword_hits_sql(col_expr: str, lang: str) -> str:
-    """SQL text of :func:`stopword_hits` over an expression string."""
-    stops = ", ".join(f"'{s}'" for s in STOPWORDS[lang])
+    """SQL text: count of words of ``col_expr`` in ``lang``'s stopword
+    list.  A quote inside a stopword (``d'un``) is doubled, the SQL
+    escape for ``'`` inside a string literal."""
+    stops = ", ".join(
+        "'" + s.replace("'", "''") + "'" for s in STOPWORDS[lang]
+    )
     return (
         f"size(filter(split(trim(lower({col_expr})), '\\\\s+'), "
         f"w -> w IN ({stops})))"
@@ -121,13 +111,10 @@ def stopword_hits_sql(col_expr: str, lang: str) -> str:
 
 def language_id_score_sql(col_expr: str) -> str:
     """SQL text of :func:`language_id_score` over an expression string.
-    Mirrors the Column form exactly — including its re-expansion of
-    every per-language hit expression at each reference (the Column
-    object is one Python value but embeds as a repeated subtree;
+    Every per-language hit expression re-expands at each reference;
     codegen-level common-subexpression elimination dedups the work at
-    runtime in both forms).  Analyzed-plan identity with the Column
-    form is pinned by the pipeline fingerprint diff recorded in
-    OPTIMIZATION_r12.md and by tests/test_round12_ops.py."""
+    runtime.  Its optimized-plan fingerprint is pinned in
+    tests/test_sql_construction.py."""
     langs = sorted(STOPWORDS)
     hits = {lang: stopword_hits_sql(col_expr, lang) for lang in langs}
     max_hits = "greatest(" + ", ".join(hits[lang] for lang in langs) + ")"
@@ -145,7 +132,7 @@ def language_id_score_sql(col_expr: str) -> str:
     return "CASE " + " ".join(branches) + " ELSE 'und' END"
 
 
-def language_id_score(col: Column | str) -> Column:
+def language_id_score(col: str) -> Column:
     """Heuristic language ID: argmax over per-language stopword hit
     counts; zero-hit or tied docs -> 'und' (undetermined), mirroring the
     reference's language_id = -1 unknown state (`language_identifier.py:24`).
@@ -164,23 +151,11 @@ def language_id_score(col: Column | str) -> Column:
     tie-break semantics: first language in alphabetical order wins the
     argmax, but a tie for the max yields 'und'.
 
-    String column names take the parsed-SQL twin (one py4j call instead
-    of ~470, analyzed-plan-identical — r12 session 2); Column inputs
-    keep the Column path below.
+    Built from :func:`language_id_score_sql` over the column ``col``:
+    one py4j call, where building it from Columns costs ~470 (r12
+    session 2).
     """
-    if isinstance(col, str) and col.isidentifier():
-        return F.expr(language_id_score_sql(f"`{col}`"))
-    langs = sorted(STOPWORDS)
-    hits = {lang: stopword_hits(col, lang) for lang in langs}
-    max_hits = F.greatest(*[hits[lang] for lang in langs])
-    n_at_max = sum(
-        [F.when(hits[lang] == max_hits, 1).otherwise(0) for lang in langs],
-        F.lit(0),
-    )
-    expr = F.when((max_hits == 0) | (n_at_max > 1), F.lit("und"))
-    for lang in langs:
-        expr = expr.when(hits[lang] == max_hits, F.lit(lang))
-    return expr.otherwise(F.lit("und"))
+    return F.expr(language_id_score_sql(f"`{col}`"))
 
 
 # ---------------------------------------------------------------------------

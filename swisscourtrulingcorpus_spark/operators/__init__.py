@@ -3,7 +3,7 @@
 from swisscourtrulingcorpus_spark.operators.relational import (  # noqa: F401
     map_join,
     asof_join,
-    top_k_per_group,
+    top_k_per_group_sql,
     date_stratified_split,
     cutoff_filter,
     value_counts_with_pct,
@@ -13,7 +13,7 @@ from swisscourtrulingcorpus_spark.operators.dedup import (  # noqa: F401
     minhash_signatures,
     minhash_lsh_candidates,
     simhash64,
-    ngram_jaccard_pairs,
+    ngram_jaccard_pairs_sql,
 )
 from swisscourtrulingcorpus_spark.operators.similarity import (  # noqa: F401
     cosine_topk_bruteforce,

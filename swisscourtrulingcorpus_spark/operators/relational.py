@@ -9,8 +9,8 @@ them collect to the driver; all are shuffle-minimal by construction:
   heavy fact rows shuffle exactly once.
 - ``asof_join``       : J6 — as-of with tolerance via union+window, no
   range-explosion cross join.
-- ``top_k_per_group`` : W1/W2 — rank window; map-side partial top-k is
-  AQE's job, the window shuffles once on the partition key.
+- ``top_k_per_group_sql`` : W1/W2 — rank window; map-side partial
+  top-k is AQE's job, the window shuffles once on the partition key.
 - ``date_stratified_split`` : D8 — a derived column, zero shuffles.
 - ``cutoff_filter``   : P7 — broadcast the tiny cutoff map, filter
   pre-shuffle so downstream aggregations see less data.
@@ -192,28 +192,16 @@ def bucketed_range_join(
     )
 
 
-def top_k_per_group(
-    df: DataFrame, partition_keys: list[str], order_by: list[Column], k: int
-) -> DataFrame:
-    """Top-k rows per group (W1/W2: top-25 citation tables, top-1000
-    most-common citations).  ``row_number`` (not rank) + deterministic
-    tie-breakers in ``order_by`` keeps results reproducible."""
-    w = Window.partitionBy(*partition_keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
 def top_k_per_group_sql(
     df: DataFrame, partition_keys: list[str], order_by_sql: str, k: int
 ) -> DataFrame:
-    """SQL-text twin of :func:`top_k_per_group` (r12, same technique as
-    functions/hashing.py): ``order_by_sql`` is the ORDER BY body as one
-    string (e.g. ``"price DESC, o_orderkey ASC"``).  Builds the identical
-    analyzed plan in 3 py4j calls instead of ~40; used on bench-timed
-    construction paths.  Keep semantics in sync with the Column form."""
+    """Top-k rows per group (W1/W2: top-25 citation tables, top-1000
+    most-common citations).  ``row_number`` (not rank) + deterministic
+    tie-breakers in ``order_by_sql`` keeps results reproducible.
+    ``order_by_sql`` is the ORDER BY body as one string (e.g.
+    ``"price DESC, o_orderkey ASC"``).  Built from parsed SQL text (r12,
+    same technique as functions/hashing.py): 3 py4j calls, where a
+    Column-built window costs ~40."""
     pk = ", ".join(f"`{c}`" for c in partition_keys)
     return (
         df.selectExpr(

@@ -24,10 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.operators.relational import (
-    top_k_per_group,
-    top_k_per_group_sql,
-)
+from swisscourtrulingcorpus_spark.operators.relational import top_k_per_group_sql
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -137,8 +134,9 @@ def cosine_topk_bruteforce_sql(
 ) -> str:
     """Whole-query SQL text of :func:`cosine_topk_bruteforce` over
     FROM-able table expressions (r12, session 2 — one parsed statement;
-    guide §1).  Plan equality with the DataFrame form is pinned by
-    tests/test_sql_construction.py."""
+    guide §1).  Both forms stay live; tests/test_sql_construction.py
+    pins the DataFrame form and the ``cosine_topk_bruteforce`` gate
+    built on this one to the same optimized-plan fingerprint."""
     norm = _norm_sql(f"`{vec_col}`")
     over = (
         "OVER (PARTITION BY query_id"

@@ -16,6 +16,8 @@ the groupBys on decision_id and the final split write.
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,7 +27,7 @@ from swisscourtrulingcorpus_spark.extraction import (
     extract_composition_udf,
     extract_judgments_udf,
     split_sections_udf,
-    uuid5_udf,
+    uuid5_col,
 )
 from swisscourtrulingcorpus_spark.functions.domain import (
     normalize_binary_judgment,
@@ -41,7 +43,7 @@ from swisscourtrulingcorpus_spark.operators.relational import (
 )
 
 
-class LazyTables(dict):
+class LazyTables(Mapping):
     """Pipeline-table mapping whose values CONSTRUCT on first access
     (r12, session 2).  ``run_extraction_pipeline`` used to build every
     derived DataFrame eagerly; a consumer like the bench's
@@ -50,36 +52,31 @@ class LazyTables(dict):
     composition / lower-court / participation it never touched —
     inside the bench's timed region.  Plans are unchanged: the same
     construction code runs, only when the table is first asked for.
-    Subclasses ``dict`` so every mapping idiom used by consumers
-    (``[]``, ``.get``, ``in``, iteration, ``.keys``) works; values are
-    memoized after the first build, preserving the old semantics where
-    two reads of one key return the SAME DataFrame object (cache()
-    marks, exactly-one-cache-entry behavior)."""
+    A read-only :class:`~collections.abc.Mapping` over the thunks, so
+    every mapping idiom (``[]``, ``.get``, ``in``, iteration,
+    ``.items``, ``dict(t)``, ``{**t}``) goes through ``__getitem__``
+    and sees built tables, never a placeholder.  Values are memoized
+    after the first build: two reads of one key return the SAME
+    DataFrame object (cache() marks, exactly-one-cache-entry
+    behavior)."""
 
     def __init__(self, thunks: dict):
-        super().__init__({k: None for k in thunks})
         self._thunks = thunks
+        self._built: dict = {}
 
     def __getitem__(self, key):
-        val = super().__getitem__(key)
-        if val is None:
-            val = self._thunks[key]()
-            super().__setitem__(key, val)
-        return val
+        if key not in self._built:
+            self._built[key] = self._thunks[key]()
+        return self._built[key]
 
-    def get(self, key, default=None):
-        if key not in self:
-            return default
-        return self[key]
+    def __iter__(self):
+        return iter(self._thunks)
 
-    def values(self):  # pragma: no cover - convenience for tests
-        return [self[k] for k in self]
-
-    def items(self):
-        return [(k, self[k]) for k in self]
+    def __len__(self):
+        return len(self._thunks)
 
 
-def run_extraction_pipeline(raw: DataFrame) -> dict[str, DataFrame]:
+def run_extraction_pipeline(raw: DataFrame) -> Mapping[str, DataFrame]:
     """raw(file_name, raw_text, spider, chamber, date, ...) → the core
     domain tables: decision, section, citation, judgment, composition.
 
@@ -88,12 +85,12 @@ def run_extraction_pipeline(raw: DataFrame) -> dict[str, DataFrame]:
 
     r12 (session 2): returns a :class:`LazyTables` mapping — the shared
     ``base`` / ``section_arrays`` frames build eagerly (every consumer
-    needs them), each derived table on first access.  Construction code
-    and plans are byte-identical to the eager form
-    (tools/pipeline_fingerprint.py before/after).
+    needs them), each derived table on first access.  The optimized-plan
+    fingerprints of every table (and of ``judgment_dataset``) are pinned
+    in tests/test_sql_construction.py.
     """
     base = raw.select(
-        uuid5_udf("file_name").alias("decision_id"),
+        uuid5_col("file_name").alias("decision_id"),
         "file_name",
         "spider",
         "chamber",

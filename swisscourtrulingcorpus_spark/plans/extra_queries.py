@@ -195,12 +195,12 @@ def uuid5_document_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`resources/uuid5_doc_ids.parquet`, doc_id 0..4999, generated once
     by Python's stdlib ``uuid.uuid5``) — a real value check instead of
     the rows-only fallback."""
-    from swisscourtrulingcorpus_spark.extraction.ids import uuid5_udf
+    from swisscourtrulingcorpus_spark.extraction.ids import uuid5_sql
 
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        uuid5_udf(F.concat(F.lit("doc_"), F.col("doc_id").cast("string"))).alias(
+        F.expr(uuid5_sql("concat('doc_', cast(doc_id as string))")).alias(
             "decision_id"
         ),
     )

@@ -197,8 +197,9 @@ def raw_corpus_df(spark: SparkSession, n_decisions: int = 120) -> DataFrame:
     iteration on the profiling box; the Arrow path is ~0.1 s).  Column
     order and types are pinned to what the dict path produced
     (alphabetical keys; int64/str; the same to_date conversion), and
-    the resulting LocalRelation is plan-fingerprint-identical
-    (tools/pipeline_fingerprint.py before/after), so every consumer —
+    the resulting LocalRelation is plan-fingerprint-identical (the
+    pipeline fingerprints pinned in tests/test_sql_construction.py), so
+    every consumer —
     including the oracle-gated extraction family — sees bit-identical
     input."""
     import pandas as pd

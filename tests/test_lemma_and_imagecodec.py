@@ -1,21 +1,15 @@
 """Round-4 units: rule-based lemma approximation (E11 fidelity,
-reference `abstract_preprocessor.py:387-410`), the training-data
+reference `abstract_preprocessor.py:387-410`) and the training-data
 operators (vocabulary application, length shards, prefix sums,
-sequence packing) and the pure-stdlib PNG/BMP codec."""
+sequence packing).  The file name is historical: the PNG/BMP codec it
+also tested was retired with the rest of the media code, since SCRC
+ingests HTML/PDF rulings only."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
 
-from swisscourtrulingcorpus_spark.extraction.imagecodec import (
-    UnsupportedImageError,
-    decode_bmp,
-    decode_image,
-    decode_png,
-    encode_bmp24,
-    encode_png,
-)
 from swisscourtrulingcorpus_spark.functions.text import (
     lemma_case_sql,
     lemma_stopword_sql,
@@ -77,46 +71,6 @@ def test_stopword_pos_proxy():
     assert _is_stop("der", "de") and _is_stop("les", "fr") and _is_stop("della", "it")
     assert not _is_stop("gericht", "de")
     assert not _is_stop("der", "fr")  # per-language lists
-
-
-# ---------------------------------------------------------------------------
-# image codec
-# ---------------------------------------------------------------------------
-
-
-def test_png_round_trip_every_filter_and_channel_count():
-    for nch in (1, 2, 3, 4):
-        for f in range(5):
-            w, h = 5, 4
-            px = bytes(
-                (x * 7 + y * 13 + c * 29 + f) % 256
-                for y in range(h)
-                for x in range(w)
-                for c in range(nch)
-            )
-            data = encode_png(w, h, nch, px, filter_for_row=lambda y, f=f: f)
-            got = decode_png(data)
-            assert got[:3] == (w, h, nch)
-            assert bytes(got[3]) == px
-
-
-def test_bmp_round_trip_row_padding():
-    for w in (1, 2, 3, 5):  # widths exercising 4-byte row padding
-        h = 3
-        px = bytes(
-            (x * 11 + y * 17 + c * 3) % 256
-            for y in range(h)
-            for x in range(w)
-            for c in range(3)
-        )
-        assert bytes(decode_bmp(encode_bmp24(w, h, px))[3]) == px
-
-
-def test_unsupported_formats_raise():
-    with pytest.raises(UnsupportedImageError):
-        decode_image(b"\xff\xd8\xff\xe0 JFIF-ish")
-    with pytest.raises(UnsupportedImageError):
-        decode_png(b"\x89PNG\r\n\x1a\n" + b"\x00" * 20)
 
 
 def test_apply_token_vocab_paths_agree(spark):
@@ -188,57 +142,6 @@ def test_length_shards_monotone_and_balanced(spark):
         df.repartition(13), "n", "doc_id", n_shards=8
     ).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, redist))
-
-
-def test_png_codec_property_random_images():
-    """Property: encode->decode is the identity for random pixel
-    buffers, sizes, channel counts and per-row filter choices."""
-    from hypothesis import given, settings, strategies as st
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        w=st.integers(1, 9),
-        h=st.integers(1, 9),
-        nch=st.sampled_from([1, 2, 3, 4]),
-        data=st.data(),
-    )
-    def check(w, h, nch, data):
-        px = bytes(
-            data.draw(
-                st.lists(
-                    st.integers(0, 255),
-                    min_size=w * h * nch,
-                    max_size=w * h * nch,
-                )
-            )
-        )
-        filters = data.draw(
-            st.lists(st.integers(0, 4), min_size=h, max_size=h)
-        )
-        enc = encode_png(w, h, nch, px, filter_for_row=lambda y: filters[y])
-        got_w, got_h, got_c, out = decode_png(enc)
-        assert (got_w, got_h, got_c) == (w, h, nch)
-        assert bytes(out) == px
-
-    check()
-
-
-def test_bmp_codec_property_random_images():
-    from hypothesis import given, settings, strategies as st
-
-    @settings(max_examples=25, deadline=None)
-    @given(w=st.integers(1, 9), h=st.integers(1, 6), data=st.data())
-    def check(w, h, data):
-        px = bytes(
-            data.draw(
-                st.lists(
-                    st.integers(0, 255), min_size=w * h * 3, max_size=w * h * 3
-                )
-            )
-        )
-        assert bytes(decode_bmp(encode_bmp24(w, h, px))[3]) == px
-
-    check()
 
 
 def test_parallel_prefix_sum_rejects_reserved_columns(spark):

@@ -219,12 +219,15 @@ def test_dedup_self_joins_reuse_exchange(spark, sf_dir):
     from swisscourtrulingcorpus_spark.sources.catalog import load_table
     from swisscourtrulingcorpus_spark.operators.dedup import (
         minhash_lsh_candidates,
-        ngram_jaccard_pairs,
     )
+    from swisscourtrulingcorpus_spark.plans.text_queries import q_ngram_jaccard
 
     docs = load_table(spark, sf_dir, "documents")
-    for fn in (minhash_lsh_candidates, ngram_jaccard_pairs):
-        plan = _final_plan(fn(docs, "text", "doc_id", spread=True))
+    for df in (
+        minhash_lsh_candidates(docs, "text", "doc_id", spread=True),
+        q_ngram_jaccard(spark, sf_dir),
+    ):
+        plan = _final_plan(df)
         assert "ReusedExchange" in plan, plan
 
 

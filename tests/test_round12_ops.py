@@ -6,9 +6,8 @@ Pins the properties the r12 changes rely on:
   nondeterministic mid-projection once (ADVICE r11): assert the
   executed plan contains a ReusedExchange and exactly one range
   Exchange subtree.
-- `ngram_jaccard_pairs`' hot-key guard must keep the single-scan /
-  ReusedExchange property while replacing the window with a broadcast
-  anti-join (no per-bucket buffering), and must still drop stop
+- `ngram_jaccard_pairs_sql`' doc-frequency filter must keep the
+  single-scan / ReusedExchange property and must still drop stop
   shingles above max_doc_freq.
 - `bm25_top_terms`' df branch must aggregate map-side (one exchange of
   (term, count) rows — no (term, doc_id) expansion exchange).
@@ -69,11 +68,9 @@ def test_parallel_rank_values(spark):
 
 
 def test_ngram_postings_exchange_reused(spark, sf_dir):
-    from swisscourtrulingcorpus_spark.operators.dedup import ngram_jaccard_pairs
-    from swisscourtrulingcorpus_spark.sources.catalog import load_table
+    from swisscourtrulingcorpus_spark.plans.text_queries import q_ngram_jaccard
 
-    docs = load_table(spark, sf_dir, "documents")
-    plan = _final_plan(ngram_jaccard_pairs(docs, "text", "doc_id", spread=True))
+    plan = _final_plan(q_ngram_jaccard(spark, sf_dir))
     # the postings exchange must be shared by the self-join sides (one
     # scan + tokenize + shingle + md5 chain; see the operator's
     # hot-bucket comment for the two bounded-buffer guards that were
@@ -83,22 +80,33 @@ def test_ngram_postings_exchange_reused(spark, sf_dir):
 
 
 def test_ngram_guard_drops_stop_shingles(spark):
-    from swisscourtrulingcorpus_spark.operators.dedup import ngram_jaccard_pairs
+    from swisscourtrulingcorpus_spark.operators.dedup import (
+        ngram_jaccard_pairs_sql,
+    )
 
     # 4 docs sharing one ubiquitous shingle ("aa bb cc"); pairs must be
     # empty once max_doc_freq < 4 because every shared shingle is hot
     rows = [(i, "aa bb cc x%d y%d z%d" % (i, i, i)) for i in range(4)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = ngram_jaccard_pairs(
-        df, "text", "doc_id", k=3, threshold=0.0, max_doc_freq=3
+    spark.createDataFrame(rows, ["doc_id", "text"]).createOrReplaceTempView(
+        "ngram_guard_docs"
+    )
+    out = spark.sql(
+        ngram_jaccard_pairs_sql(
+            "ngram_guard_docs", "text", "doc_id", k=3, threshold=0.0,
+            max_doc_freq=3,
+        )
     )
     assert out.count() == 0
     # with the threshold above the sharing count, the shingle is kept
     # and every pair shares it
-    out2 = ngram_jaccard_pairs(
-        df, "text", "doc_id", k=3, threshold=0.0, max_doc_freq=4
+    out2 = spark.sql(
+        ngram_jaccard_pairs_sql(
+            "ngram_guard_docs", "text", "doc_id", k=3, threshold=0.0,
+            max_doc_freq=4,
+        )
     )
     assert out2.count() == 6
+    spark.catalog.dropTempView("ngram_guard_docs")
 
 
 def test_bm25_df_branch_single_exchange(spark, sf_dir):
