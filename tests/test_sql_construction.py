@@ -7,7 +7,11 @@ pipeline's helpers (UUIDv5 ids, language ID, token counts, binary
 judgments) are SQL-text bodies too.  Each has one implementation.  This
 module pins what they compute: the committed optimized logical plan
 fingerprint (`plans/parity.py::plan_fingerprint`) of every headline
-gate, of every pipeline output and of each of those helpers.
+gate and of the DataFrame form of each operator that keeps one
+(``test_sql_twin_plans_identical``), of each of those helpers
+(``test_expression_twins_analyzed_identical``, which also holds the
+Column/SQL-text expression pairs that remain to the same plan) and of
+every pipeline output (``test_pinned_plan_fingerprints``).
 Identical optimized plans mean identical physical planning input,
 hence identical execution and results — stronger than oracle-only
 equivalence, and it also catches a change to a shared SQL helper
@@ -30,6 +34,8 @@ cached temp view is dropped behind the cache.
 """
 
 from __future__ import annotations
+
+import re
 
 HEADLINE_FINGERPRINTS = {
     "asof_purchase_attribution": "2b809a73725c51f9be7eca92841be892",
@@ -138,46 +144,114 @@ def _operator_dataframe_forms(spark, sf_dir) -> dict:
     }
 
 
-def test_pinned_plan_fingerprints(spark, sf_dir):
-    from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
-        judgment_dataset,
-        run_extraction_pipeline,
-    )
+def _assert_pinned(checks) -> None:
     from swisscourtrulingcorpus_spark.plans.parity import plan_fingerprint
-    from swisscourtrulingcorpus_spark.plans.registry import queries
-    from swisscourtrulingcorpus_spark.sources.domain_fixtures import (
-        raw_corpus_df,
-    )
 
-    q = queries()
-    tables = run_extraction_pipeline(raw_corpus_df(spark, 200))
-    checks = [
-        (f"gate {name}", pinned, q[name](spark, sf_dir))
-        for name, pinned in HEADLINE_FINGERPRINTS.items()
-    ] + [
-        (f"pipeline {name}", pinned, tables[name])
-        for name, pinned in PIPELINE_FINGERPRINTS.items()
-        if name != "judgment_dataset"
-    ] + [
-        (
-            "pipeline judgment_dataset",
-            PIPELINE_FINGERPRINTS["judgment_dataset"],
-            judgment_dataset(tables),
-        )
-    ] + [
-        (f"helper {name}", HELPER_FINGERPRINTS[name], df)
-        for name, df in _helper_frames(spark).items()
-    ] + [
-        (f"DataFrame form of gate {name}", HEADLINE_FINGERPRINTS[name], df)
-        for name, df in _operator_dataframe_forms(spark, sf_dir).items()
-    ]
-    assert set(tables) | {"judgment_dataset"} == set(PIPELINE_FINGERPRINTS)
     changed = []
     for label, pinned, df in checks:
         got = plan_fingerprint(df)
         if got != pinned:
             changed.append(f"{label}: {got} (pinned {pinned})")
     assert not changed, "optimized plans changed:\n" + "\n".join(changed)
+
+
+def _norm_plan(df) -> str:
+    """Optimized plan text modulo expression ids and lambda variable
+    names (the SQL parser names lambda args x/acc/v where the Column API
+    generates x_4, x_5, ...: same structure, different tags)."""
+    s = df._jdf.queryExecution().optimizedPlan().toString()
+    s = re.sub(r"#\d+L?", "#X", s)
+    return re.sub(r"lambda [a-z]+(_\d+)?", "lambda V", s)
+
+
+def test_sql_twin_plans_identical(spark, sf_dir):
+    """Every headline gate's SQL-text plan equals its pinned
+    fingerprint, and so does the DataFrame form of each operator that
+    keeps both forms alive."""
+    from swisscourtrulingcorpus_spark.plans.registry import queries
+
+    q = queries()
+    _assert_pinned(
+        [
+            (f"gate {name}", pinned, q[name](spark, sf_dir))
+            for name, pinned in HEADLINE_FINGERPRINTS.items()
+        ]
+        + [
+            (f"DataFrame form of gate {name}", HEADLINE_FINGERPRINTS[name], df)
+            for name, df in _operator_dataframe_forms(spark, sf_dir).items()
+        ]
+    )
+
+
+def test_expression_twins_analyzed_identical(spark):
+    """The pipeline helpers' SQL bodies equal their pinned fingerprints,
+    and each Column/SQL-text expression pair that keeps both forms
+    (hashing, money, similarity) builds the same optimized plan."""
+    from pyspark.sql import functions as F
+
+    from swisscourtrulingcorpus_spark.functions import hashing as h
+    from swisscourtrulingcorpus_spark.functions import money as m
+    from swisscourtrulingcorpus_spark.operators import similarity as sim
+
+    _assert_pinned(
+        [
+            (f"helper {name}", HELPER_FINGERPRINTS[name], df)
+            for name, df in _helper_frames(spark).items()
+        ]
+    )
+
+    df = spark.createDataFrame(
+        [("A  b C d", ["a", "b", "c", "d"], [1.0, 2.0], [3.0, 4.0],
+          1.5, 0.1, 0.2)],
+        "t string, w array<string>, u array<double>, v array<double>, "
+        "l_extendedprice double, l_discount double, l_tax double",
+    )
+    pairs = [
+        ("normalize_ws", h.normalize_ws("t"), h.normalize_ws_sql("t")),
+        ("h32", h.h32("t"), h.h32_sql("t")),
+        ("h32 seeded", h.h32("t", "7"), h.h32_sql("t", "7")),
+        ("word_shingles_from_words", h.word_shingles_from_words(F.col("w")),
+         h.word_shingles_from_words_sql("w")),
+        ("dec2", m.dec2("l_tax"), m.dec2_sql("l_tax")),
+        ("one", m.one(), m.one_sql()),
+        ("disc_price", m.disc_price(), m.disc_price_sql()),
+        ("charge", m.charge(), m.charge_sql()),
+        ("_dot", sim._dot(F.col("u"), F.col("v")), sim._dot_sql("u", "v")),
+        ("_norm", sim._norm(F.col("u")), sim._norm_sql("u")),
+    ]
+    for name, col_form, sql_form in pairs:
+        a = _norm_plan(df.select(col_form.alias("o")))
+        b = _norm_plan(df.select(F.expr(sql_form).alias("o")))
+        assert a == b, f"{name} twin drift:\n{a}\n---\n{b}"
+
+
+def test_pinned_plan_fingerprints(spark):
+    """Every output of the extraction pipeline equals its pinned
+    fingerprint."""
+    from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
+        judgment_dataset,
+        run_extraction_pipeline,
+    )
+    from swisscourtrulingcorpus_spark.sources.domain_fixtures import (
+        raw_corpus_df,
+    )
+
+    tables = run_extraction_pipeline(raw_corpus_df(spark, 200))
+    assert set(tables) | {"judgment_dataset"} == set(PIPELINE_FINGERPRINTS)
+    _assert_pinned(
+        [
+            (f"pipeline {name}", pinned, tables[name])
+            for name, pinned in PIPELINE_FINGERPRINTS.items()
+            if name != "judgment_dataset"
+        ]
+        + [
+            (
+                "pipeline judgment_dataset",
+                PIPELINE_FINGERPRINTS["judgment_dataset"],
+                judgment_dataset(tables),
+            )
+        ]
+    )
 
 
 def test_stopword_literals_escape_quotes(spark, monkeypatch):
